@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main (driver contract): runs every SparkEntry query against
  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -12,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // JVM/codegen warmup on a trivial action so the first query isn't
     // charged for JIT + classloading.
@@ -170,13 +160,17 @@ object Bench {
     val nFail = results.count(_._2 < 0)
     val contractLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","n_queries":${results.size},"n_failed":$nFail,"plan_fp":$fps}"""
-    val summaryLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFail,"queries_artifact":"BENCH_LOCAL.json"}"""
+    // artifact paths default to the working directory (the checkout root
+    // under `sbt run`); the summary names the full artifact's resolved path
+    val benchOut = new java.io.File(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")).getAbsolutePath
+    val summaryLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFail,"queries_artifact":"$benchOut"}"""
     def writeFile(path: String, s: String): Unit =
       try java.nio.file.Files.write(java.nio.file.Paths.get(path),
         (s + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case e: Throwable => System.err.println(s"[bench] artifact write failed ($path): ${e.getMessage}") }
-    writeFile(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_LOCAL.json"), fullLine)
-    writeFile(sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "/root/repo/BENCH_SUMMARY.json"), summaryLine)
+    writeFile(benchOut, fullLine)
+    writeFile(sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "BENCH_SUMMARY.json"), summaryLine)
     println(summaryLine)
     println(contractLine)
     Console.out.flush()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,11 @@ object Verify {
     // BEFORE any oracle SQL is rendered — a world-shared /tmp path lets
     // concurrent Verify runs (different sfDirs, parallel CI) overwrite
     // each other's side tables and silently compare against another
-    // corpus's hash maps.
+    // corpus's hash maps. The tables sit NEXT TO the dump dir
+    // (`<outDir>_aux`), not inside it, where every directory is a query.
     sys.props("graft.aux.dir") =
-      new java.io.File(outDir, "graft_aux").getAbsolutePath
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      new java.io.File(outDir).getAbsolutePath + "_aux"
+    val spark = LocalSession.start(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Farm/xxhash side tables the FARM_FINGERPRINT oracles join (the
     // driver's DuckDB pass runs right after this dump on the same host)

@@ -27,7 +27,7 @@ object OracleAux {
 
   /** Aux location the oracle SQL strings embed. Keyed per-run via the
     * `graft.aux.dir` system property, which [[graft.Verify]] pins to
-    * `<outDir>/graft_aux` BEFORE any oracle SQL is rendered — so two
+    * `<outDir>_aux` BEFORE any oracle SQL is rendered — so two
     * Verify runs on different sfDirs (or concurrent CI jobs on a shared
     * host) can never overwrite each other's side tables mid-pass. The
     * /tmp default only covers ad-hoc REPL use outside Verify. */

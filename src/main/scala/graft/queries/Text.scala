@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.operators.BigramLm
 
 /**
  * Text-analysis operators for the large-scale training-data pipeline
@@ -456,56 +457,38 @@ object Text {
    * thresholds can be trusted on NEW crawls (same-corpus NLL
    * systematically flatters duplicated content).
    *
-   * Scale shape: the [[textLmNll]] machinery with the split predicate
-   * pushed into the scan — model tables collapse the TRAIN slice to its
-   * vocabulary (map-side combined), the TEST stream joins them back on
-   * the bigram equi-key (unseen bigrams left-join to pure smoothing
-   * mass, [[lmTerm]]'s coalesce path — exercised here by construction,
-   * where the same-corpus scorer never takes it). Determinism: the usual
-   * LM recipe (6-dp DECIMAL terms, exact m weights, one final division);
-   * the vocab guard empties the output when the train slice is empty (a
-   * 0-vocab smoothing denominator is -ln(inf)).
+   * Scale shape: the [[graft.operators.BigramLm]] model fitted on the
+   * TRAIN slice (vocabulary-bounded, map-side combined); the TEST pairs
+   * join it back on the bigram equi-key (unseen bigrams left-join to pure
+   * smoothing mass — the coalesce path the same-corpus scorer never
+   * takes). The vocab guard empties the output when the train slice is
+   * empty (a 0-vocab smoothing denominator is -ln(inf)).
    */
   def textLmHeldoutPpl(s: SparkSession, dir: String): DataFrame = {
-    val dec6 = org.apache.spark.sql.types.DataTypes.createDecimalType(20, 6)
-    val base = docs(s, dir)
-      .select(col("doc_id"), col("source"), words(col("text")).as("ws"),
-        Curation.md5Mod100(col("doc_id")).as("bkt"))
-    val train = base.filter(col("bkt") < 80)
-    val test = base.filter(col("bkt") >= 80)
-    // the bigram model table is vocab-bounded — persist it so the vocab
-    // action (r12, [[lmVocabViaBigrams]]: train tokenized ONCE, not
-    // twice), the history re-aggregation, and the scoring join all read
-    // the materialized rows
-    val cb = explodeBigrams(train)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
-    val cu = cb.groupBy(col("w1")).agg(sum(col("cb")).as("cu"))
-    val vocab = lmVocabViaBigrams(
-      docs(s, dir).filter(Curation.md5Mod100(col("doc_id")) < 80), cb)
-    val perDoc = explodeBigrams(test)
-      .groupBy(col("doc_id"), col("source"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("m"))
-      .join(cb, Seq("w1", "w2"), "left")
-      .join(cu, Seq("w1"), "left")
-      .filter(lit(vocab > 0L))
-      .select(col("doc_id"), col("source"), col("m"),
-        lmTerm(vocab).as("term"),
-        when(col("cb").isNull, col("m")).otherwise(0L).as("unseen"))
+    val (train, test) = heldoutSplit(s, dir)
+    val (_, lm) = BigramLm.fit(train)
+    val perDoc = lm.score(BigramLm.pairs(test))
+      .filter(lit(lm.vocab > 0L))
+      .withColumn("unseen", when(col("cb").isNull, col("m")).otherwise(0L))
       .groupBy(col("doc_id"), col("source"))
-      .agg(sum(col("m")).as("n_bigrams"),
-        round(sum(col("m") * col("term")).cast("double") / sum(col("m")), 6)
-          .as("nll"),
-        sum(col("unseen")).as("n_unseen"))
+      .agg(BigramLm.nBigrams, BigramLm.nll, sum(col("unseen")).as("n_unseen"))
     perDoc
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_test_docs"),
-        round(sum(col("nll").cast(dec6)).cast("double") / count(lit(1)), 6)
-          .as("mean_nll"),
+        BigramLm.meanNll(col("nll")).as("mean_nll"),
         round(sum(col("n_unseen")).cast("double") /
           sum(col("n_bigrams")).cast("double"), 6).as("unseen_rate"))
       .orderBy(col("source"))
+  }
+
+  /** The held-out LMs' shared split: the train documents (md5 bucket
+    * < 80) and the test token arrays (bucket ≥ 80) keyed by doc and
+    * source. */
+  private def heldoutSplit(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val bkt = Curation.md5Mod100(col("doc_id"))
+    (docs(s, dir).filter(bkt < 80),
+      docs(s, dir).filter(bkt >= 80)
+        .select(col("doc_id"), col("source"), words(col("text")).as("ws")))
   }
 
   private def textLmHeldoutSql: String = {
@@ -584,32 +567,17 @@ object Text {
    * round-trip). Scoring is the identical test-side distinct-pair join
    * shape. Determinism: the LM recipe — exact integer counts into one
    * IEEE expression per distinct bigram, −ln rounded to 6-dp DECIMAL,
-   * m-weighted exact sums, single final divisions.
+   * then [[graft.operators.BigramLm]]'s m-weighted folds.
    */
   def textLmKneserNey(s: SparkSession, dir: String): DataFrame = {
-    val dec6 = org.apache.spark.sql.types.DataTypes.createDecimalType(20, 6)
-    val base = docs(s, dir)
-      .select(col("doc_id"), col("source"), words(col("text")).as("ws"),
-        Curation.md5Mod100(col("doc_id")).as("bkt"))
-    val train = base.filter(col("bkt") < 80)
-    val test = base.filter(col("bkt") >= 80)
-    // the single bigram-count model table; persisted because the vocab
-    // action, the type count (B), the history re-aggregation, the
-    // continuation re-aggregation, and the scoring join all read it
-    val cb = explodeBigrams(train)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
-    // vocab from the persisted model table + the one-token train sliver
-    // (r12, [[lmVocabViaBigrams]]) — train is tokenized once, not twice
-    val vocab = lmVocabViaBigrams(
-      docs(s, dir).filter(Curation.md5Mod100(col("doc_id")) < 80), cb)
-    val bTypes = cb.count()
+    val (train, test) = heldoutSplit(s, dir)
+    val (_, lm) = BigramLm.fit(train)
+    val bTypes = lm.cb.count()
     // history totals AND distinct-continuation counts in ONE re-agg
-    val cu = cb.groupBy(col("w1"))
+    val cu = lm.cb.groupBy(col("w1"))
       .agg(sum(col("cb")).as("cu"), count(lit(1)).as("n1p"))
-    val nr = cb.groupBy(col("w2")).agg(count(lit(1)).as("n1pr"))
-    val pcDen = (bTypes + vocab + 1).toDouble
+    val nr = lm.cb.groupBy(col("w2")).agg(count(lit(1)).as("n1pr"))
+    val pcDen = (bTypes + lm.vocab + 1).toDouble
     val pCont = (coalesce(col("n1pr"), lit(0L)).cast("double") + lit(1.0d)) /
       lit(pcDen)
     val cuD = col("cu").cast("double")
@@ -618,26 +586,20 @@ object Text {
         lit(0.0d)) / cuD +
         (lit(KnDiscount) * col("n1p").cast("double") / cuD) * pCont)
       .otherwise(pCont)
-    val perDoc = explodeBigrams(test)
-      .groupBy(col("doc_id"), col("source"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("m"))
-      .join(cb, Seq("w1", "w2"), "left")
+    val perDoc = BigramLm.pairs(test)
+      .join(lm.cb, Seq("w1", "w2"), "left")
       .join(cu, Seq("w1"), "left")
       .join(nr, Seq("w2"), "left")
-      .filter(lit(vocab > 0L))
+      .filter(lit(lm.vocab > 0L))
       .select(col("doc_id"), col("source"), col("m"),
-        round(-log(p), 6).cast(dec6).as("term"),
+        BigramLm.term(-log(p)).as("term"),
         when(col("cb").isNull, col("m")).otherwise(0L).as("backoff"))
       .groupBy(col("doc_id"), col("source"))
-      .agg(sum(col("m")).as("n_bigrams"),
-        round(sum(col("m") * col("term")).cast("double") / sum(col("m")), 6)
-          .as("nll"),
-        sum(col("backoff")).as("n_backoff"))
+      .agg(BigramLm.nBigrams, BigramLm.nll, sum(col("backoff")).as("n_backoff"))
     perDoc
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_test_docs"),
-        round(sum(col("nll").cast(dec6)).cast("double") / count(lit(1)), 6)
-          .as("mean_nll"),
+        BigramLm.meanNll(col("nll")).as("mean_nll"),
         round(sum(col("n_backoff")).cast("double") /
           sum(col("n_bigrams")).cast("double"), 6).as("backoff_rate"))
       .orderBy(col("source"))
@@ -1226,76 +1188,6 @@ object Text {
       .orderBy(col("doc_id"))
   }
 
-  /** Add-one smoothing pseudo-count for the bigram LM (Laplace α=1). */
-  private val LmAlpha = 1.0
-
-  /** Adjacent-token pair explode over a relation carrying a `ws` token
-    * array: keeps every other column, drops `ws`, emits one (w1, w2) row
-    * per bigram. Shared by the batch LM operators and the streaming
-    * scorer so the pair definition can't drift. */
-  private[graft] def explodeBigrams(df: DataFrame): DataFrame = df
-    .filter(size(col("ws")) >= 2)
-    // arrays_zip of two slices, NOT transform(sequence, i -> struct):
-    // higher-order lambdas evaluate interpreted per element while the
-    // zip/slice chain stays codegen — same pairs (verified exceptAll-
-    // equal both directions), ~30% less explode wall-clock
-    .select(col("*"), explode(arrays_zip(
-      slice(col("ws"), lit(1), size(col("ws")) - 1).as("w1"),
-      slice(col("ws"), lit(2), size(col("ws")) - 1).as("w2"))).as("p"))
-    .withColumn("w1", col("p.w1")).withColumn("w2", col("p.w2"))
-    .drop("p", "ws")
-
-  /** Bigram-LM model tables from a pair stream: bigram counts (one
-    * map-side-combined groupBy) and history counts RE-AGGREGATED from the
-    * bigram table — no second corpus scan. */
-  private[graft] def lmCounts(bi: DataFrame): (DataFrame, DataFrame) = {
-    val cb = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
-    val cu = cb.groupBy(col("w1")).agg(sum(col("cb")).as("cu"))
-    (cb, cu)
-  }
-
-  /** Corpus vocabulary size — the smoothing denominator's metadata-sized
-    * driver scalar (AQE-statistics round-trip convention). */
-  private[graft] def lmVocabSize(withWs: DataFrame): Long = withWs
-    .select(explode(col("ws")).as("t"))
-    .agg(countDistinct(col("t"))).first().getLong(0)
-
-  /** [[lmVocabSize]] WITHOUT its dedicated corpus tokenize pass
-    * (optimization r12, guide §1.2 "remove unnecessary passes"): every
-    * token of a document with ≥ 2 tokens appears as some w1 or w2 of that
-    * document's own bigrams, so the vocabulary is exactly
-    * distinct(w1 ∪ w2 ∪ tokens of one-token docs). The bigram relation the
-    * caller already builds (any collapse level — per-corpus cb or
-    * per-doc bi0 — as long as w1/w2 cover the population's bigrams)
-    * supplies the first two branches from its persisted rows; only the
-    * ≤ 1-token sliver is tokenized, found by a codegen string prefilter:
-    * tokens are single-space splits, so ≥ 2 non-empty segments require an
-    * inner space in the space-trimmed text — `instr(trim(text), ' ') = 0`
-    * ⟺ the doc has 0 or 1 tokens. NULL text yields NULL instr → dropped,
-    * matching the old path (explode of a NULL token array emits nothing).
-    *
-    * `docsWithText` must be the SAME document population the caller's
-    * vocabulary is defined over (e.g. the md5-bucket train slice). */
-  private[graft] def lmVocabViaBigrams(docsWithText: DataFrame,
-      pairs: DataFrame): Long = {
-    val singles = docsWithText
-      .filter(instr(trim(col("text")), " ") === 0)
-      .select(explode(words(col("text"))).as("t"))
-    pairs.select(col("w1").as("t"))
-      .unionByName(pairs.select(col("w2").as("t")))
-      .unionByName(singles)
-      .agg(countDistinct(col("t"))).first().getLong(0)
-  }
-
-  /** One bigram's −ln p(w2|w1) under add-one smoothing, rounded then cast
-    * to exact DECIMAL for order-independent summation. Unseen counts
-    * (left-join NULLs on a stream of fresh documents) coalesce to pure
-    * smoothing mass. */
-  private[graft] def lmTerm(vocab: Long): Column =
-    round(-log((coalesce(col("cb"), lit(0L)) + lit(LmAlpha)) /
-      (coalesce(col("cu"), lit(0L)) + lit(LmAlpha * vocab))), 6)
-      .cast(org.apache.spark.sql.types.DataTypes.createDecimalType(20, 6))
-
   /**
    * Corpus-trained bigram language-model scoring — the CCNet/Gopher-style
    * perplexity quality filter: train an add-one-smoothed bigram LM on the
@@ -1305,17 +1197,15 @@ object Text {
    * NLL ⇒ the document looks like the corpus; high NLL flags
    * outlier/garbled text the quality battery's integer rules miss.
    *
-   * p(w2|w1) = (c(w1,w2)+α) / (c(w1,·)+α·V), V = corpus vocabulary size.
+   * p(w2|w1) = (c(w1,w2)+1) / (c(w1,·)+V), V = corpus vocabulary size.
    *
-   * Scale: the model is two corpus-level aggregates — bigram counts from
-   * ONE token-pair explode (map-side-combined groupBy, bounded by
-   * distinct bigrams), and history counts RE-AGGREGATED from the bigram
-   * table (vocab-bounded, no second corpus scan). V is a metadata-sized
-   * driver scalar (the AQE-statistics round-trip, same convention as
-   * [[textTfidfTopk]]'s corpus count). Scoring is a second linear
-   * explode joined to the two count tables on their grouping keys (AQE
-   * broadcasts the vocab-sized history table when it fits). Nothing
-   * O(corpus) is ever cached.
+   * Scale: [[graft.operators.BigramLm.fit]] keyed by doc — ONE explode
+   * collapsed to per-(doc, bigram) multiplicities (the query-owned
+   * persist), the model tables re-aggregated from them, V a driver
+   * scalar. One −ln(p) per DISTINCT bigram, joined back to the per-doc
+   * pairs and folded per doc. Caching the token arrays instead was
+   * MEASURED SLOWER at sf0.1 (9.9 s vs 8.3 s pipeline_curation_lm
+   * construct — array serialization costs more than the recompute).
    *
    * Determinism: the conditional probability is one IEEE division of
    * exactly-representable integers; each bigram's −ln(p) is rounded to
@@ -1325,41 +1215,12 @@ object Text {
    * accepts for its per-touch division.
    */
   def textLmNll(s: SparkSession, dir: String): DataFrame = {
-    // NOTE deliberately NOT persisted: the vocab action and the bigram
-    // explode each tokenize the corpus, but caching the token arrays was
-    // MEASURED SLOWER at sf0.1 (9.9 s vs 8.3 s pipeline_curation_lm
-    // construct — array serialization costs more than the recompute)
-    val withWs = docs(s, dir)
-      .select(col("doc_id"), words(col("text")).as("ws"))
-    // collapse the occurrence stream to per-(doc, bigram) multiplicities
-    // FIRST: everything downstream — the model tables, the scoring join,
-    // the per-doc fold — then runs on the distinct-pair relation, not the
-    // token stream, and the explode happens exactly once (query-owned
-    // persist). Σ m·term over distinct pairs equals Σ term over
-    // occurrences EXACTLY: term is a 6-dp DECIMAL and m an integer, so
-    // the product is exact and order-independent.
-    val bi0 = explodeBigrams(withWs)
-      .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("m"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
-    // vocabulary size over ALL tokens (single-token docs included): the
-    // smoothing denominator must not depend on which docs emit bigrams.
-    // Derived from the persisted bigram relation + the one-token sliver
-    // (r12) — this action also materializes bi0, so the corpus is
-    // tokenized ONCE per query instead of twice.
-    val vocab = lmVocabViaBigrams(docs(s, dir), bi0)
-    val cb = bi0.groupBy(col("w1"), col("w2")).agg(sum(col("m")).as("cb"))
-    val cu = cb.groupBy(col("w1")).agg(sum(col("cb")).as("cu"))
-    // one −ln(p) per DISTINCT bigram, not per occurrence
-    val terms = cb.join(cu, Seq("w1"))
-      .select(col("w1"), col("w2"), lmTerm(vocab).as("term"))
-    bi0
-      .join(terms, Seq("w1", "w2"))
+    val (bi, lm) = BigramLm.fit(docs(s, dir), col("doc_id"))
+    val terms = lm.cb.join(lm.cu, Seq("w1"))
+      .select(col("w1"), col("w2"), BigramLm.addOneTerm(lm.vocab).as("term"))
+    bi.join(terms, Seq("w1", "w2"))
       .groupBy(col("doc_id"))
-      .agg(sum(col("m")).as("n_bigrams"),
-        round(sum(col("m") * col("term")).cast("double") / sum(col("m")), 6)
-          .as("nll"))
+      .agg(BigramLm.nBigrams, BigramLm.nll)
       .orderBy(col("doc_id"))
   }
 
@@ -1376,11 +1237,10 @@ object Text {
    *
    * Scale: adds one doc_id equi-join (lang + n_chars ride in) and a
    * per-LANG ntile window (hash-partitioned — never global) over the LM
-   * pipeline; the rollup is ≤ langs × 3 groups. Mean NLL sums the 6-dp
-   * per-doc doubles as exact DECIMAL before the one double division.
+   * pipeline; the rollup is ≤ langs × 3 groups; mean NLL is
+   * [[graft.operators.BigramLm.meanNll]].
    */
   def corpusCcnetBuckets(s: SparkSession, dir: String): DataFrame = {
-    val decS = org.apache.spark.sql.types.DataTypes.createDecimalType(30, 8)
     val scored = textLmNll(s, dir)
       .join(docs(s, dir).select(col("doc_id"),
         coalesce(col("lang"), lit("")).as("lang"), col("n_chars")), Seq("doc_id"))
@@ -1391,8 +1251,7 @@ object Text {
       .groupBy(col("lang"), col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("n_chars")), lit(0L)).as("sum_chars"),
-        round(sum(col("nll").cast(decS)).cast("double") / count(lit(1)), 6)
-          .as("mean_nll"))
+        BigramLm.meanNll(col("nll")).as("mean_nll"))
       .orderBy(col("lang"), col("bucket"))
   }
 
@@ -1615,43 +1474,24 @@ object Text {
    * DECIMAL.
    */
   def dsirScore(s: SparkSession, dir: String): DataFrame = {
-    val withWs = docs(s, dir)
-      .select(col("doc_id"), col("lang"), words(col("text")).as("ws"))
-    // one explode, collapsed to per-(doc, bigram) multiplicity with the
-    // doc's target flag riding along (lang is doc-functional) — the
-    // general and target model tables, the importance-weight join, and
-    // the per-doc fold all run on the distinct-pair relation (same
-    // occurrences-vs-distinct argument as [[textLmNll]]; the per-distinct
-    // term times integer m is exact DECIMAL)
-    val bi0 = explodeBigrams(withWs)
-      .groupBy(col("doc_id"), (col("lang") === "en").as("is_t"),
-        col("w1"), col("w2"))
-      .agg(count(lit(1)).as("m"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
-    // vocab from the persisted bigram relation + the one-token sliver
-    // (r12, [[lmVocabViaBigrams]]) — one corpus tokenize instead of two
-    val vocab = lmVocabViaBigrams(docs(s, dir), bi0)
-    val cbG = bi0.groupBy(col("w1"), col("w2")).agg(sum(col("m")).as("cbg"))
-    val cuG = cbG.groupBy(col("w1")).agg(sum(col("cbg")).as("cug"))
-    val cbT = bi0.filter(col("is_t"))
-      .groupBy(col("w1"), col("w2")).agg(sum(col("m")).as("cbt"))
-    val cuT = cbT.groupBy(col("w1")).agg(sum(col("cbt")).as("cut"))
-    val term = round(
-      log((coalesce(col("cbt"), lit(0L)) + lit(1.0)) /
-        (coalesce(col("cut"), lit(0L)) + lit(1.0 * vocab))) -
-      log((col("cbg") + lit(1.0)) / (col("cug") + lit(1.0 * vocab))), 6)
-      .cast(org.apache.spark.sql.types.DataTypes.createDecimalType(20, 6))
-    val terms = cbG
-      .join(cuG, Seq("w1"))
-      .join(cbT, Seq("w1", "w2"), "left")
-      .join(cuT, Seq("w1"), "left")
+    // one fit keyed by (doc, target flag): lang is doc-functional, so the
+    // target model is the general one's pairs restricted to the flag
+    val (bi, general) = BigramLm.fit(docs(s, dir),
+      col("doc_id"), (col("lang") === "en").as("is_t"))
+    val target = BigramLm.Model.of(bi.filter(col("is_t")), general.vocab)
+    val term = BigramLm.term(
+      BigramLm.addOneLogP(col("cbt"), col("cut"), general.vocab) -
+      BigramLm.addOneLogP(col("cb"), col("cu"), general.vocab))
+    val terms = general.cb
+      .join(general.cu, Seq("w1"))
+      .join(target.cb.withColumnRenamed("cb", "cbt"), Seq("w1", "w2"), "left")
+      .join(target.cu.withColumnRenamed("cu", "cut"), Seq("w1"), "left")
       .select(col("w1"), col("w2"), term.as("term"))
-    bi0
+    bi
       .join(terms, Seq("w1", "w2"))
       .groupBy(col("doc_id"))
-      .agg(sum(col("m")).as("n_bigrams"),
-        round(sum(col("m") * col("term")).cast("double"), 6).as("log_w"))
+      .agg(BigramLm.nBigrams,
+        round(BigramLm.totalTerm.cast("double"), 6).as("log_w"))
       .withColumn("target_like", col("log_w") > 0.0)
       .orderBy(col("doc_id"))
   }
@@ -1679,9 +1519,7 @@ object Text {
       .withNtile(joined, 10, Seq(col("nll").asc, col("doc_id")), "nll_decile")
       .groupBy(col("nll_decile"))
       .agg(count(lit(1)).as("n_docs"),
-        round(sum(col("nll").cast(org.apache.spark.sql.types.DataTypes
-          .createDecimalType(20, 6))).cast("double") / count(lit(1)), 6)
-          .as("mean_nll"),
+        BigramLm.meanNll(col("nll")).as("mean_nll"),
         round(sum(col("rules_passed")).cast("double") / count(lit(1)), 6)
           .as("mean_rules"))
       .orderBy(col("nll_decile"))
@@ -1800,7 +1638,6 @@ object Text {
    */
   def mixDoremiStep(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val dec6 = org.apache.spark.sql.types.DataTypes.createDecimalType(20, 6)
     val dec8 = org.apache.spark.sql.types.DataTypes.createDecimalType(30, 8)
     val perSrc = textLmNll(s, dir)
       .join(docs(s, dir).select(col("doc_id"), col("source"), col("n_chars")),
@@ -1808,8 +1645,7 @@ object Text {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("n_chars")), lit(0L)).as("sum_chars"),
-        round(sum(col("nll").cast(dec6)).cast("double") / count(lit(1)), 6)
-          .as("mean_nll"))
+        BigramLm.meanNll(col("nll")).as("mean_nll"))
     val zw = Window.partitionBy(zeroPart(col("source")))
     val base = round(col("sum_chars").cast("double") /
       sum(col("sum_chars")).over(zw).cast("double"), 6)
@@ -1963,8 +1799,8 @@ object Text {
    * unigram scan), floored at c ≥ [[PmiMinCount]].
    *
    * Scale: one bigram explode + map-side-combined groupBy; marginals
-   * RE-AGGREGATE from the bigram-count table (the [[lmCounts]] no-second-
-   * scan pattern) and join back on their key; N is a 1-row metadata
+   * RE-AGGREGATE from the bigram-count table (the [[graft.operators.BigramLm]]
+   * no-second-scan pattern) and join back on their key; N is a 1-row metadata
    * scalar. The top-K is TakeOrdered — never a global sort. Determinism:
    * PMI = ln c12 + ln N − ln c1 − ln c2 with each ln of an EXACT integer
    * rounded to 8 dp before the sum (products like c12·N overflow a
@@ -1972,7 +1808,7 @@ object Text {
    * ties broken lexicographically.
    */
   def textPmiCollocations(s: SparkSession, dir: String): DataFrame = {
-    val bi = explodeBigrams(
+    val bi = BigramLm.explode(
       docs(s, dir).filter(col("text").isNotNull)
         .select(words(col("text")).as("ws")))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))

@@ -339,8 +339,9 @@ object StreamingOps {
    * garbled/outlier pages carry their cross-entropy from ingest instead
    * of waiting for the next batch sweep (the same frozen-model contract
    * as the fastText-style quality scorer's streaming leg). Bigrams the
-   * model never saw score as pure smoothing mass — `lmTerm`'s
-   * coalesce-0 path, which the batch twin's inner joins make a no-op.
+   * model never saw score as pure smoothing mass —
+   * [[graft.operators.BigramLm]]'s coalesce-0 path, which the batch twin's
+   * inner joins make a no-op.
    *
    * Scale/state design: the model is the two static count tables
    * (distinct-bigram-bounded, cached via `onCache`) and the vocabulary
@@ -355,28 +356,20 @@ object StreamingOps {
   def lmScoreStream(newDocs: DataFrame, corpusDocs: DataFrame,
       lateness: String = "1 hour",
       onCache: DataFrame => Unit = _ => ()): DataFrame = {
-    import graft.queries.Text
-    val corpusWs = corpusDocs
-      .select(col("doc_id"), Text.words(col("text")).as("ws"))
-    val vocab = Text.lmVocabSize(corpusWs)
-    val (cb0, cu0) = Text.lmCounts(Text.explodeBigrams(corpusWs))
-    def cached(df: DataFrame): DataFrame = {
-      val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      onCache(c)
-      c
-    }
-    val cb = cached(cb0)
-    val cu = cached(cu0)
+    import graft.operators.BigramLm
+    val (pairs, lm) = BigramLm.fit(corpusDocs)
+    val cu = lm.cu.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    onCache(pairs)
+    onCache(cu)
     val scored = newDocs
-      .select(col("doc_id"), col("ingest_ts"), Text.words(col("text")).as("ws"))
+      .select(col("doc_id"), col("ingest_ts"),
+        graft.queries.Text.words(col("text")).as("ws"))
       .withWatermark("ingest_ts", lateness)
-    Text.explodeBigrams(scored)
-      .join(cb, Seq("w1", "w2"), "left")
-      .join(cu, Seq("w1"), "left")
-      .select(col("doc_id"), col("ingest_ts"), Text.lmTerm(vocab).as("term"))
+    // occurrence-level (m = 1): a per-(doc, bigram) pre-aggregation would
+    // be a second stateful aggregation on the stream
+    lm.copy(cu = cu).score(BigramLm.explode(scored).withColumn("m", lit(1L)))
       .groupBy(col("doc_id"), col("ingest_ts"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        round(sum(col("term")).cast("double") / count(lit(1)), 6).as("nll"))
+      .agg(BigramLm.nBigrams, BigramLm.nll)
       .drop("ingest_ts")
   }
 

@@ -2,6 +2,7 @@ package graft.workers
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.BigramLm
 
 /**
  * Bigram-LM corpus scoring as pipeline steps — the worker form of
@@ -14,44 +15,36 @@ import org.apache.spark.sql.functions._
  * The persisted model is three parquet tables under `model_uri`:
  * `cb` (bigram counts), `cu` (history counts) and `meta` (one row:
  * vocabulary size) — distinct-bigram-bounded, no driver-side
- * dictionary. Scoring left-joins the frozen tables so bigrams the model
- * never saw score as pure smoothing mass (the shared
- * [[graft.queries.Text.lmTerm]] coalesce path, identical to the
- * streaming leg).
+ * dictionary. Both sides are [[graft.operators.BigramLm]]: scoring
+ * left-joins the frozen tables so bigrams the model never saw score as
+ * pure smoothing mass, identical to the streaming leg.
  */
 object CorpusLm {
 
-  private def withWs(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), graft.queries.Text.words(col("text")).as("ws"))
-
-  /** Fit (count) the bigram LM on a documents table and persist it. */
+  /** Fit the bigram LM on a documents table and persist it; the corpus is
+    * tokenized once. */
   def trainLm(docs: DataFrame, modelUri: String): Long = {
-    import graft.queries.Text
-    val ws = withWs(docs)
-    val vocab = Text.lmVocabSize(ws)
-    val (cb, cu) = Text.lmCounts(Text.explodeBigrams(ws))
-    cb.write.mode("overwrite").parquet(s"$modelUri/cb")
-    cu.write.mode("overwrite").parquet(s"$modelUri/cu")
-    val s = docs.sparkSession
-    import s.implicits._
-    Seq(vocab).toDF("vocab").coalesce(1)
-      .write.mode("overwrite").parquet(s"$modelUri/meta")
-    vocab
+    val (pairs, lm) = BigramLm.fit(docs)
+    try {
+      lm.cb.write.mode("overwrite").parquet(s"$modelUri/cb")
+      lm.cu.write.mode("overwrite").parquet(s"$modelUri/cu")
+      val s = docs.sparkSession
+      import s.implicits._
+      Seq(lm.vocab).toDF("vocab").coalesce(1)
+        .write.mode("overwrite").parquet(s"$modelUri/meta")
+    } finally pairs.unpersist()
+    lm.vocab
   }
 
   /** Score a documents table with a persisted (frozen) bigram LM. */
   def scoreWithLm(spark: SparkSession, docs: DataFrame, modelUri: String): DataFrame = {
-    import graft.queries.Text
-    val cb = spark.read.parquet(s"$modelUri/cb")
-    val cu = spark.read.parquet(s"$modelUri/cu")
-    val vocab = spark.read.parquet(s"$modelUri/meta").first().getLong(0)
-    Text.explodeBigrams(withWs(docs))
-      .join(cb, Seq("w1", "w2"), "left")
-      .join(cu, Seq("w1"), "left")
-      .select(col("doc_id"), Text.lmTerm(vocab).as("term"))
+    val lm = BigramLm.Model(spark.read.parquet(s"$modelUri/cb"),
+      spark.read.parquet(s"$modelUri/cu"),
+      spark.read.parquet(s"$modelUri/meta").first().getLong(0))
+    lm.score(BigramLm.pairs(
+        docs.select(col("doc_id"), graft.queries.Text.words(col("text")).as("ws"))))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        round(sum(col("term")).cast("double") / count(lit(1)), 6).as("nll"))
+      .agg(BigramLm.nBigrams, BigramLm.nll)
   }
 
   /** DAG worker: count the bigram LM over a documents table and persist

@@ -15,10 +15,6 @@ import duckdb
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-# Verify writes non-query outputs into out_dir too; skip them when
-# enumerating result dumps
-SKIP_DIRS = {"graft_aux"}
-
 def canon(rows):
     out = []
     for r in rows:
@@ -46,8 +42,7 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d))
-                   and d not in SKIP_DIRS)
+                   if os.path.isdir(os.path.join(out_dir, d)))
     record = {}
     n_pass = n_fail = n_rowsonly = 0
     for name in names:
