@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.DriverCollect
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -45,47 +46,22 @@ object Curation {
     * a genuine algorithmic bug can trip this. */
   private val StarMaxIters = 60
 
-  /** Edge sets at or below this size are solved by union-find on the
-    * driver — the edge relation is already COLLAPSED (unique-set graph),
-    * so at this size it is metadata, the same statistics-to-driver
-    * round-trip as the dense-vocabulary probe. Above it, the distributed
-    * propagation runs; node count never matters (untouched nodes are
-    * identity-labelled without ever leaving the executors). */
-  private val EdgeCollectCap = 1 << 20
-
-  /** [[EdgeCollectCap]] exposed for specs that exercise the driver
-    * fast paths against their distributed twins. */
-  private[queries] def testEdgeCollectCap: Long = EdgeCollectCap
-
   /**
    * Connected components by iterative min-label propagation, with a
-   * driver-side union-find fast path for metadata-sized edge sets.
+   * driver-side union-find fast path for edge sets that fit
+   * [[DriverCollect]]'s cap (the edge relation is already COLLAPSED —
+   * the unique-set graph — so at that size it is metadata). Above the cap
+   * the distributed propagation runs; node count never matters (untouched
+   * nodes are identity-labelled without ever leaving the executors).
    *
    * @param allDocs one row per node: (doc_id)
-   * @param pairs   undirected edges as (da, db)
-   * @param edgeCollectCap driver fast-path threshold (tests pin it to 0
-   *                       to force the distributed path)
+   * @param pairs   undirected edges as (da, db); the probe and the
+   *                distributed path each read it, so callers pass it
+   *                persisted or checkpointed
    * @return (doc_id, comp) where comp = min doc_id reachable (incl. self)
    */
-  def connectedComponents(allDocs: DataFrame, pairs: DataFrame,
-      edgeCollectCap: Long = EdgeCollectCap): DataFrame = {
-    // the cap feeds limit(cap + 1) below — a Long that .toInt would wrap
-    // negative (analysis error) or truncate small (silently solving a
-    // TRUNCATED edge list = wrongly split clusters) must be rejected here
-    require(edgeCollectCap < Int.MaxValue,
-      s"edgeCollectCap must be < Int.MaxValue (driver collect); got $edgeCollectCap")
-    // persisted across the size probe: when the probe overflows the cap,
-    // the distributed path re-reads the (often expensive) pair relation
-    // instead of re-executing it — and the iterative path re-reads edges
-    // every round anyway
-    val cachedPairs =
-      if (edgeCollectCap > 0) pairs.persist(MEMORY_AND_DISK) else pairs
-    val smallEdges =
-      if (edgeCollectCap > 0)
-        Some(cachedPairs.select(col("da"), col("db")).limit(edgeCollectCap.toInt + 1)
-          .collect()).filter(_.length <= edgeCollectCap)
-      else None
-    try smallEdges match {
+  def connectedComponents(allDocs: DataFrame, pairs: DataFrame): DataFrame =
+    DriverCollect.collectSmall(pairs.select(col("da"), col("db"))) match {
       case Some(rows) =>
         // driver union-find over the collapsed edge list; only nodes that
         // appear in an edge get a non-identity label, so the (possibly
@@ -109,9 +85,8 @@ object Curation {
         allDocs.select(col("doc_id"))
           .join(broadcast(lookup), Seq("doc_id"), "left_outer")
           .select(col("doc_id"), coalesce(col("cc"), col("doc_id")).as("comp"))
-      case None => iterativeComponents(allDocs, cachedPairs)
-    } finally if (edgeCollectCap > 0) cachedPairs.unpersist(false)
-  }
+      case None => iterativeComponents(allDocs, pairs)
+    }
 
   /** `spark.graft.components.reliableCheckpoint` selects the per-round
     * checkpoint flavor for the iterative component solvers:
@@ -314,39 +289,105 @@ object Curation {
   }
 
   /**
-   * Canonical-document selection over the near-dup graph: connected
-   * components of the exact same-lang Jaccard pairs (J ≥ 0.8), each doc
-   * labelled with its cluster id (the cluster's min doc_id), cluster size,
-   * and whether it is the cluster's canonical representative — the doc a
-   * curation run keeps.
+   * The collapsed near-dup graph the dedup-graph operators share.
+   * Supernodes are unique word sets: every member of one set has the same
+   * neighbor multiset (its clique siblings plus all members of each
+   * near-dup partner set), hence the same degree, component, rank and
+   * core membership. Set edges join near-duplicate sets. Built once per
+   * query:
+   *  - `sp`: set-representative pairs (sa, sb), sid = a set's min
+   *    doc_id — checkpointed once, so every consumer re-reads the
+   *    materialized pairs. Without that lineage truncation every
+   *    iteration's plan NESTS the full pair-generation tree, with its
+   *    multi-thousand-entry literal token maps (measured 6 s of pure
+   *    driver planning at sf0.1 before any task ran). Its release is
+   *    handed to the enclosing query scope: the persisted `act` may be
+   *    only partly cached by the probe's limit-collect, so the returned
+   *    plans can re-read `sp` until the query's first action ends;
+   *  - `edges`: both directions (src, dst) over `sp`;
+   *  - `nodes`: (sid, m, members), m = member count — a projection of
+   *    `groups`, which the set-graph build already persisted;
+   *  - `act`: participating sets (sid, m, cmass, deg) — an intra clique
+   *    (m ≥ 2) or ≥ 1 cross edge; cmass = Σ m over partner sets and
+   *    deg = (m − 1) + cmass, each member's degree — persisted;
+   *  - `small`: the driver fast path — `act`'s rows and the set
+   *    adjacency, when both fit [[DriverCollect]]'s cap.
+   * `act` and `small` are lazy: [[pipelineDedupGraph]]'s components
+   * need only `sp` and `groups`.
    */
+  private final class SetGraph(s: SparkSession, dir: String) {
+    private val built = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
+    /** The unique-set universe: (lang, members, nw, …) per set. */
+    val groups: DataFrame = built._2
+    val reliable: Boolean = useReliableCheckpoint(s)
+    val sp: DataFrame = roundCheckpoint(built._1
+      .select(array_min(col("ma")).as("sa"), array_min(col("mb")).as("sb")), reliable)
+    handOffCheckpoint(sp)
+    val edges: DataFrame = sp.select(col("sa").as("src"), col("sb").as("dst"))
+      .unionByName(sp.select(col("sb").as("src"), col("sa").as("dst")))
+
+    val nodes: DataFrame = groups.select(array_min(col("members")).as("sid"),
+      size(col("members")).cast("long").as("m"), col("members"))
+
+    lazy val act: DataFrame = {
+      val cmass = edges
+        .join(nodes.select(col("sid").as("dst"), col("m").as("md")), "dst")
+        .groupBy(col("src")).agg(sum(col("md")).as("cmass"))
+      val a = nodes.select(col("sid"), col("m"))
+        .join(cmass.withColumnRenamed("src", "sid"), Seq("sid"), "left")
+        .select(col("sid"), col("m"), coalesce(col("cmass"), lit(0L)).as("cmass"))
+        .filter(col("m") >= 2L || col("cmass") > 0L)
+        .withColumn("deg", col("m") - 1 + col("cmass"))
+        .persist(MEMORY_AND_DISK)
+      graft.core.QueryCaches.report(a)
+      a
+    }
+
+    /** (`act` rows as (sid, m, cmass, deg), sid → partner sids). */
+    lazy val small: Option[(Array[Row], Map[Long, List[Long]])] =
+      DriverCollect.collectSmall(act).flatMap { actRows =>
+        DriverCollect.collectSmall(sp).map { spRows =>
+          val adj = scala.collection.mutable.Map.empty[Long, List[Long]]
+          spRows.foreach { r =>
+            val (a, b) = (r.getLong(0), r.getLong(1))
+            adj(a) = b :: adj.getOrElse(a, Nil)
+            adj(b) = a :: adj.getOrElse(b, Nil)
+          }
+          (actRows, adj.toMap)
+        }
+      }
+  }
+
   /** [[dedupComponents]] without the presentation sort — consumers that
     * immediately re-shuffle (the best-of-cluster window joins and
     * re-partitions by comp_id) must not pay a corpus-wide range sort whose
     * ordering the next exchange destroys. */
   private def dedupComponentsCore(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
-    // Collapse → solve → expand: identical word sets collapse to one node
-    // (represented by their min doc_id — so the component minimum over
-    // representatives IS the component minimum over docs), components run
-    // on the unique-set graph (orders of magnitude smaller than the
-    // expanded doc-pair graph: a 30-doc boilerplate cluster is 435 doc
-    // pairs but ONE node), and membership expands only at the end.
     val (setPairs, groups) = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
-    val spMin = setPairs
-      .select(array_min(col("ma")).as("sa"), array_min(col("mb")).as("sb"))
-    componentsFromGraph(s, dir, spMin, groups)
+    // persisted across the size probe, so an overflowing probe hands the
+    // distributed path materialized pairs; no plan returned by
+    // [[connectedComponents]] reads them (the driver path broadcasts a
+    // local lookup, the distributed paths end on eager checkpoints)
+    val pairs = setPairs
+      .select(array_min(col("ma")).as("da"), array_min(col("mb")).as("db"))
+      .persist(MEMORY_AND_DISK)
+    try componentsFromGraph(s, dir, groups, pairs) finally pairs.unpersist(false)
   }
 
-  /** [[dedupComponentsCore]] over an already-built set graph (spMin =
-    * set-representative pairs, groups = the unique-set universe) — the
-    * seam [[pipelineDedupGraph]] uses to feed ONE pair-generation pass to
+  /** Collapse → solve → expand: identical word sets collapse to one node
+    * (represented by their min doc_id — so the component minimum over
+    * representatives IS the component minimum over docs), components run
+    * on the unique-set graph (orders of magnitude smaller than the
+    * expanded doc-pair graph: a 30-doc boilerplate cluster is 435 doc
+    * pairs but ONE node), and membership expands only at the end. Takes
+    * the set universe `groups` and its materialized representative pairs
+    * (da, db), so [[pipelineDedupGraph]] feeds ONE pair-generation pass to
     * both graph consumers. */
   private def componentsFromGraph(s: SparkSession, dir: String,
-      spMin: DataFrame, groups: DataFrame): DataFrame = {
+      groups: DataFrame, pairs: DataFrame): DataFrame = {
     val reps = groups.select(array_min(col("members")).as("doc_id"))
-    val edges = spMin.select(col("sa").as("da"), col("sb").as("db"))
-    val comp = connectedComponents(reps, edges)
+    val comp = connectedComponents(reps, pairs)
     val grouped = groups
       .select(array_min(col("members")).as("rep"), explode(col("members")).as("doc_id"))
       .join(comp.withColumnRenamed("doc_id", "rep"), "rep")
@@ -360,7 +401,7 @@ object Curation {
     val docComp = load(s, dir, "documents").select(col("doc_id"))
       .join(grouped, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     graft.core.QueryCaches.report(docComp)
     val sz = docComp.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
     docComp.join(sz, "comp")
@@ -368,6 +409,13 @@ object Curation {
         (col("doc_id") === col("comp")).as("is_canonical"))
   }
 
+  /**
+   * Canonical-document selection over the near-dup graph: connected
+   * components of the exact same-lang Jaccard pairs (J ≥ 0.8), each doc
+   * labelled with its cluster id (the cluster's min doc_id), cluster size,
+   * and whether it is the cluster's canonical representative — the doc a
+   * curation run keeps.
+   */
   def dedupComponents(s: SparkSession, dir: String): DataFrame =
     dedupComponentsCore(s, dir).orderBy(col("doc_id"))
 
@@ -565,49 +613,17 @@ object Curation {
       return load(s, dir, "documents")
         .select(col("doc_id"), lit(0L).as("deg"), lit(0.0).as("rank"))
     }
-    val (setPairs, groups) = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
-    val spMin = setPairs
-      .select(array_min(col("ma")).as("sa"), array_min(col("mb")).as("sb"))
-    pagerankFromGraph(s, dir, spMin, groups, nDocs)
+    pagerankFromGraph(new SetGraph(s, dir), nDocs)
   }
 
   /** [[dedupGraphPagerank]] over an already-built set graph — the
     * [[pipelineDedupGraph]] seam (see [[componentsFromGraph]]). */
-  private[queries] def pagerankFromGraph(s: SparkSession, dir: String,
-      spMin: DataFrame, groups: DataFrame, nDocs: Long,
-      collectCap: Long = EdgeCollectCap): DataFrame = {
-    require(collectCap < Int.MaxValue,
-      s"collectCap must be < Int.MaxValue (driver collect); got $collectCap")
+  private def pagerankFromGraph(g: SetGraph, nDocs: Long): DataFrame = {
+    val s = g.sp.sparkSession
     val base = 0.15 / nDocs.toDouble // (1−d)/n — identical IEEE op in the oracle
-    // Eager-checkpoint the edge list (same reliable/local switch as
-    // [[iterativeComponents]]): without lineage truncation every
-    // iteration's plan NESTS the full jaccardPairs tree — including its
-    // multi-thousand-entry literal token maps — and Catalyst re-analyzes
-    // a tree that grows a level per round (measured 6 s of pure driver
-    // planning at sf0.1 before any task ran; 11.6 s → 3.4 s after).
-    val reliable = s.conf.getOption("spark.graft.components.reliableCheckpoint")
-      .exists(_.toBoolean)
-    if (reliable) require(s.sparkContext.getCheckpointDir.isDefined,
-      "spark.graft.components.reliableCheckpoint=true requires " +
-        "SparkContext.setCheckpointDir (a fault-tolerant path every executor can reach)")
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    def freeCkpt(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectLeaves().foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      }
-    def handOff(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectLeaves().foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          graft.core.QueryCaches.reportRdd(l.rdd)
-        case _ => ()
-      }
-    // SUPERNODE iteration: every member of one unique word SET has the
-    // same neighbor multiset (clique siblings + all members of each
-    // near-dup partner set), hence identical degree and — by induction —
-    // identical rank every round. So the power iteration runs on the
-    // ≤|unique sets| collapsed graph: deg_S = (m_S−1) + Σ_T m_T,
+    // SUPERNODE iteration ([[SetGraph]]): all members of one set have
+    // identical rank every round (by induction), so the power iteration
+    // runs on the ≤|unique sets| collapsed graph: deg_S = (m_S−1) + Σ_T m_T,
     // inflow_S = (m_S−1)·t_S + Σ_T m_T·t_T, where t = round(r/deg, 14)
     // as exact DECIMAL and the ·m multiplications are decimal×integer —
     // EXACT, so the result is bit-identical to the member-level sum of m
@@ -616,65 +632,21 @@ object Curation {
     // 11.6 s → ~3 s); at 100 TB it is the difference between the
     // iteration scaling with boilerplate CLIQUE AREA versus unique
     // content.
-    val nodes = groups
-      .select(array_min(col("members")).as("sid"),
-        size(col("members")).cast("long").as("m"), col("members"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(nodes)
-    // materialize the set-pair projection ONCE before the two-direction
-    // union (both branches reference it; unmaterialized, the whole pair
-    // generation would run twice). Both directions read the checkpoint,
-    // so the union itself needs no second materialization unless the
-    // distributed iteration (which re-reads it every round) runs.
-    val sp = ckpt(spMin)
-    val edges = sp.select(col("sa").as("src"), col("sb").as("dst"))
-      .unionByName(sp.select(col("sb").as("src"), col("sa").as("dst")))
-    // participating sets: an intra clique (m ≥ 2) or ≥1 cross edge
-    val crossMass = edges
-      .join(nodes.select(col("sid").as("dst"), col("m").as("m_dst")), "dst")
-      .groupBy(col("src")).agg(sum(col("m_dst")).as("cmass"))
-    val act = nodes.select(col("sid"), col("m"))
-      .join(crossMass.withColumnRenamed("src", "sid"), Seq("sid"), "left")
-      .select(col("sid"), col("m"),
-        coalesce(col("cmass"), lit(0L)).as("cmass"))
-      .filter(col("m") >= 2 || col("cmass") > 0)
-      .select(col("sid"), col("m"),
-        (col("m") - 1 + col("cmass")).as("deg"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(act)
-    // Driver fast path (optimization r11, the [[connectedComponents]] /
-    // [[dedupGraphKcore]] cap convention): when the participating-set
-    // relation AND the set-pair list are both metadata-sized, the three
-    // power-iteration rounds run on the driver with the IDENTICAL
-    // arithmetic chain — java.math.BigDecimal.valueOf(d).setScale(n,
-    // HALF_UP) is exactly Spark's Round-on-double and double→DECIMAL cast
-    // (both go through Double.toString), decimal ×/+ are exact, and
-    // Decimal.toDouble is BigDecimal.doubleValue — so every intermediate
-    // matches the distributed iteration bit for bit. Saves ~3 jobs per
-    // round plus the per-round checkpoint barriers; above the cap the
-    // distributed iteration below is unchanged.
-    val smallAct =
-      if (collectCap > 0)
-        Some(act.limit(collectCap.toInt + 1).collect())
-          .filter(_.length <= collectCap)
-      else None
-    val smallSp = smallAct.flatMap { _ =>
-      Some(sp.limit(collectCap.toInt + 1).collect())
-        .filter(_.length <= collectCap)
-    }
-    val result = (smallAct, smallSp) match {
-      case (Some(actRows), Some(spRows)) =>
+    g.small match {
+      case Some((actRows, adj)) =>
+        // Driver fast path: the three power-iteration rounds run with the
+        // IDENTICAL arithmetic chain — java.math.BigDecimal.valueOf(d)
+        // .setScale(n, HALF_UP) is exactly Spark's Round-on-double and
+        // double→DECIMAL cast (both go through Double.toString), decimal
+        // ×/+ are exact, and Decimal.toDouble is BigDecimal.doubleValue —
+        // so every intermediate matches the distributed iteration bit for
+        // bit. Saves ~3 jobs per round plus the per-round checkpoint
+        // barriers.
         import java.math.{BigDecimal => JBD, RoundingMode}
         def round(d: Double, s: Int): Double =
           JBD.valueOf(d).setScale(s, RoundingMode.HALF_UP).doubleValue
         val m = actRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val deg = actRows.map(r => r.getLong(0) -> r.getLong(2)).toMap
-        val adj = scala.collection.mutable.Map.empty[Long, List[Long]]
-        spRows.foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          adj(a) = b :: adj.getOrElse(a, Nil)
-          adj(b) = a :: adj.getOrElse(b, Nil)
-        }
+        val deg = actRows.map(r => r.getLong(0) -> r.getLong(3)).toMap
         val sids = actRows.map(_.getLong(0))
         var r = sids.map(_ -> 1.0 / nDocs.toDouble).toMap
         for (_ <- 1 to PrIters) {
@@ -695,12 +667,11 @@ object Curation {
         import s.implicits._
         val lookup = sids.toSeq.map(v => (v, deg(v), r(v)))
           .toDF("sid", "deg", "rank")
-        handOff(sp)
-        nodes.join(broadcast(lookup), Seq("sid"))
+        g.nodes.join(broadcast(lookup), Seq("sid"))
           .select(explode(col("members")).as("doc_id"), col("deg"), col("rank"))
           .orderBy(col("rank").desc, col("doc_id"))
           .limit(PrTopK)
-      case _ =>
+      case None =>
         // t as DECIMAL(17,16) (ranks are < 1, so 16 fractional digits is
         // the full 16-dp rounding the member-level DECIMAL(38,16) cast
         // applied) × m as DECIMAL(20,0) → DECIMAL(38,16): precision
@@ -709,17 +680,14 @@ object Curation {
         // oracle's arithmetic.
         val decT = org.apache.spark.sql.types.DataTypes.createDecimalType(17, 16)
         val decM = org.apache.spark.sql.types.DataTypes.createDecimalType(20, 0)
-        val edgesC = ckpt(edges)
-        // sp must outlive the first action: the persisted `act` may be
-        // only partially cached by the probe's limit-collect, and its
-        // remaining partitions recompute through the un-checkpointed
-        // union over sp
-        handOff(sp)
-        var ranks = ckpt(act.select(col("sid").as("v"),
-          (lit(1.0) / lit(nDocs.toDouble)).as("r")))
+        // per-round checkpoints: the [[iterativeComponents]] lineage
+        // discipline
+        val edgesC = roundCheckpoint(g.edges, g.reliable)
+        var ranks = roundCheckpoint(g.act.select(col("sid").as("v"),
+          (lit(1.0) / lit(nDocs.toDouble)).as("r")), g.reliable)
         for (_ <- 1 to PrIters) {
           val withT = ranks
-            .join(act.withColumnRenamed("sid", "v"), "v")
+            .join(g.act.withColumnRenamed("sid", "v"), "v")
             .select(col("v"),
               round(col("r") / col("deg").cast("double"), 14).cast(decT).as("t"),
               col("m"))
@@ -728,7 +696,7 @@ object Curation {
               (col("t") * col("m").cast(decM)).as("c")), "src")
             .groupBy(col("dst")).agg(sum(col("c")).as("cin"))
             .withColumnRenamed("dst", "v")
-          val next = ckpt(withT
+          val next = roundCheckpoint(withT
             .select(col("v"), (col("t") * (col("m") - 1).cast(decM)).as("cself"))
             .join(cross, Seq("v"), "left")
             .select(col("v"), round(lit(base) + lit(PrDamping) *
@@ -736,23 +704,22 @@ object Curation {
                 lit(java.math.BigDecimal.ZERO)
                   .cast(org.apache.spark.sql.types.DataTypes
                     .createDecimalType(38, 16))) +
-                col("cself")).cast("double"), 12).as("r")))
-          freeCkpt(ranks)
+                col("cself")).cast("double"), 12).as("r")), g.reliable)
+          freeCheckpoint(ranks)
           ranks = next
         }
         // the final round's and the edge list's checkpoint RDDs back the
         // returned plan — hand their release to the enclosing query scope
-        handOff(ranks)
-        handOff(edgesC)
+        handOffCheckpoint(ranks)
+        handOffCheckpoint(edgesC)
         // expand supernode ranks back to member documents
         ranks
-          .join(act.withColumnRenamed("sid", "v").select(col("v"), col("deg")), "v")
-          .join(nodes.select(array_min(col("members")).as("v"), col("members")), "v")
+          .join(g.act.select(col("sid").as("v"), col("deg")), "v")
+          .join(g.nodes.select(col("sid").as("v"), col("members")), "v")
           .select(explode(col("members")).as("doc_id"), col("deg"), col("r").as("rank"))
           .orderBy(col("rank").desc, col("doc_id"))
           .limit(PrTopK)
     }
-    result
   }
 
   /**
@@ -762,11 +729,12 @@ object Curation {
    * the full Jaccard set-graph build (together 10.7 s of the sf0.1
    * suite); the cross-query ownership contract forbids sharing a persist
    * between them, so the sanctioned shape is this composition — the
-   * set-pair projection is persisted ONCE (query-owned) and feeds both
-   * the component iteration and the power iteration. Output: the
-   * [[PrTopK]] most central documents with their cluster id, size,
-   * canonicality, degree and rank — "which boilerplate hubs dominate
-   * which clusters", the page a dedup governance review reads first.
+   * [[SetGraph]] is built and its set pairs materialized ONCE
+   * (query-owned), feeding both the component iteration and the power
+   * iteration. Output: the [[PrTopK]] most central documents with their
+   * cluster id, size, canonicality, degree and rank — "which boilerplate
+   * hubs dominate which clusters", the page a dedup governance review
+   * reads first.
    */
   def pipelineDedupGraph(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
@@ -777,13 +745,10 @@ object Curation {
           lit(0L).as("cluster_size"), lit(true).as("is_canonical"),
           lit(0L).as("deg"), lit(0.0).as("rank"))
     }
-    val (setPairs, groups) = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
-    val spMin = setPairs
-      .select(array_min(col("ma")).as("sa"), array_min(col("mb")).as("sb"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(spMin)
-    val comp = componentsFromGraph(s, dir, spMin, groups)
-    val pr = pagerankFromGraph(s, dir, spMin, groups, nDocs)
+    val g = new SetGraph(s, dir)
+    val comp = componentsFromGraph(s, dir, g.groups,
+      g.sp.select(col("sa").as("da"), col("sb").as("db")))
+    val pr = pagerankFromGraph(g, nDocs)
     pr.join(comp, Seq("doc_id"))
       .select(col("doc_id"), col("comp_id"), col("cluster_size"),
         col("is_canonical"), col("deg"), col("rank"))
@@ -825,15 +790,7 @@ object Curation {
    * either way (Σ deg(deg−1)/2 — no enumeration). Counts are exact
    * integers, the coefficient one final rounded division.
    */
-  def dedupGraphTriangles(s: SparkSession, dir: String): DataFrame =
-    dedupGraphTrianglesImpl(s, dir, EdgeCollectCap)
-
-  /** [[dedupGraphTriangles]] with the driver fast-path cap exposed (tests
-    * pin it to 0 to force the distributed enumeration). */
-  private[queries] def dedupGraphTrianglesImpl(s: SparkSession, dir: String,
-      collectCap: Long): DataFrame = {
-    require(collectCap < Int.MaxValue,
-      s"collectCap must be < Int.MaxValue (driver collect); got $collectCap")
+  def dedupGraphTriangles(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     val d38 = DecimalType(38, 0)
     val (setPairs, _) = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
@@ -846,18 +803,13 @@ object Curation {
       .distinct()
       .persist(MEMORY_AND_DISK)
     graft.core.QueryCaches.report(edges)
-    // Driver fast path (optimization r11, the EdgeCollectCap convention):
-    // the orientation, wedge generation and closing-edge probe are pure
-    // integer logic over the collapsed set graph — below the cap they run
-    // on the driver (apex cap and tie-break rules replicated verbatim),
-    // and only the final one-row select (with Spark's own round()) builds
-    // a plan. Above the cap the distributed enumeration below is unchanged.
-    val smallEdges =
-      if (collectCap > 0)
-        Some(edges.limit(collectCap.toInt + 1).collect())
-          .filter(_.length <= collectCap)
-      else None
-    smallEdges match {
+    // Driver fast path ([[DriverCollect]]): the orientation, wedge
+    // generation and closing-edge probe are pure integer logic over the
+    // collapsed set graph — below the cap they run on the driver (apex cap
+    // and tie-break rules replicated verbatim), and only the final one-row
+    // select (with Spark's own round()) builds a plan. Above the cap the
+    // distributed enumeration below runs.
+    DriverCollect.collectSmall(edges) match {
       case Some(rows) =>
         val deg = scala.collection.mutable.Map.empty[Long, Long]
         rows.foreach { r =>
@@ -1168,71 +1120,22 @@ object Curation {
    * [[dedupComponents]] checkpoint discipline, but with a FIXED round
    * budget, so no diameter cliff exists here.
    */
-  def dedupGraphKcore(s: SparkSession, dir: String): DataFrame =
-    dedupGraphKcoreImpl(s, dir, EdgeCollectCap)
-
-  /** [[dedupGraphKcore]] with the driver fast-path cap exposed (tests pin
-    * it to 0 to force the distributed peel). */
-  private[queries] def dedupGraphKcoreImpl(s: SparkSession, dir: String,
-      collectCap: Long): DataFrame = {
-    require(collectCap < Int.MaxValue,
-      s"collectCap must be < Int.MaxValue (driver collect); got $collectCap")
+  def dedupGraphKcore(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     // Optimization r11: peel on the COLLAPSED set graph ([[kcorePeelSuper]]
     // — exactness argued there), never the expanded doc-pair graph. The
     // doc-level answer is reconstructed exactly: every member of set S
-    // shares deg0 = (m_S − 1) + Σ_{T adj} m_T, the survive/peel decision,
-    // and the final core degree — expansion is one explode at the end.
-    // Metadata-sized set graphs (≤ [[EdgeCollectCap]] participating sets
-    // AND set edges) peel on the DRIVER — the [[connectedComponents]]
-    // union-find fast-path convention: no per-round distributed jobs at
-    // all; above the cap the distributed supernode peel runs.
+    // shares deg0 = (m_S − 1) + Σ_{T adj} m_T (the [[SetGraph]] `deg`),
+    // the survive/peel decision, and the final core degree — expansion is
+    // one explode at the end. A set graph that fits [[DriverCollect]]'s
+    // cap peels on the DRIVER (no per-round distributed jobs at all);
+    // above it the distributed supernode peel runs.
     // Before: 10.9 s at sf0.1 (expanded edges persisted per round, plan
     // nesting); after: see OPTIMIZATION_r11.md.
-    val (setPairs, groups) = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
-    val reliable = useReliableCheckpoint(s)
-    // materialize the canonical set-pair projection once; every consumer
-    // below (cmass, peel rounds or driver collect) re-reads the checkpoint
-    val sp = roundCheckpoint(setPairs
-      .select(array_min(col("ma")).as("sa"), array_min(col("mb")).as("sb")),
-      reliable)
-    val edges = sp.select(col("sa").as("src"), col("sb").as("dst"))
-      .unionByName(sp.select(col("sb").as("src"), col("sa").as("dst")))
-    val nodes = groups.select(array_min(col("members")).as("sid"),
-        size(col("members")).cast("long").as("m"), col("members"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(nodes)
-    val cmass = edges
-      .join(nodes.select(col("sid").as("dst"), col("m").as("md")), "dst")
-      .groupBy(col("src")).agg(sum(col("md")).as("cmass"))
-    // participating sets = docs with ≥ 1 edge: an intra clique (m ≥ 2)
-    // or ≥ 1 cross edge — the doc-level deg0 population
-    val act = nodes.select(col("sid"), col("m"))
-      .join(cmass.withColumnRenamed("src", "sid"), Seq("sid"), "left")
-      .select(col("sid"), col("m"), coalesce(col("cmass"), lit(0L)).as("cmass"))
-      .filter(col("m") >= 2L || col("cmass") > 0L)
-      .withColumn("deg0", col("m") - 1 + col("cmass"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(act)
-    val smallAct =
-      if (collectCap > 0)
-        Some(act.limit(collectCap.toInt + 1).collect())
-          .filter(_.length <= collectCap)
-      else None
-    val smallSp = smallAct.flatMap { _ =>
-      Some(sp.limit(collectCap.toInt + 1).collect())
-        .filter(_.length <= collectCap)
-    }
-    val out = (smallAct, smallSp) match {
-      case (Some(actRows), Some(spRows)) =>
-        // driver peel over the metadata-sized collapsed graph
+    val g = new SetGraph(s, dir)
+    g.small match {
+      case Some((actRows, adj)) =>
         val m = actRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val adj = scala.collection.mutable.Map.empty[Long, List[Long]]
-        spRows.foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          adj(a) = b :: adj.getOrElse(a, Nil)
-          adj(b) = a :: adj.getOrElse(b, Nil)
-        }
         def docCount(surv: Set[Long]): Long = surv.iterator.map(m).sum
         var surv = actRows.filter(_.getLong(3) >= 2L).map(_.getLong(0)).toSet
         var prevN = docCount(surv)
@@ -1257,23 +1160,23 @@ object Curation {
           (sid, r.getLong(3), ic, coreDeg)
         }
         import s.implicits._
-        nodes.join(broadcast(lookup
+        g.nodes.join(broadcast(lookup
             .toDF("sid", "deg0", "in_core2", "core_deg")), Seq("sid"))
           .select(explode(col("members")).as("doc_id"), col("deg0"),
             col("in_core2"), col("core_deg"), lit(converged).as("converged"))
           .orderBy(col("doc_id"))
-      case _ =>
-        val edgesC = roundCheckpoint(edges, reliable)
-        val (surv, converged) = kcorePeelSuper(act, edgesC, reliable)
+      case None =>
+        val edgesC = roundCheckpoint(g.edges, g.reliable)
+        val (surv, converged) = kcorePeelSuper(g.act, edgesC, g.reliable)
         // core degree within the FINAL survivor set, survivors only
         val cmR = edgesC
           .join(surv.select(col("sid").as("dst"), col("m").as("md")), "dst")
           .groupBy(col("src")).agg(sum(col("md")).as("cmr"))
-        val res = act
+        val res = g.act
           .join(surv.select(col("sid"), lit(true).as("ic")), Seq("sid"), "left")
           .join(cmR.withColumnRenamed("src", "sid"), Seq("sid"), "left")
-          .join(nodes.select(col("sid"), col("members")), Seq("sid"))
-          .select(explode(col("members")).as("doc_id"), col("deg0"),
+          .join(g.nodes.select(col("sid"), col("members")), Seq("sid"))
+          .select(explode(col("members")).as("doc_id"), col("deg").as("deg0"),
             coalesce(col("ic"), lit(false)).as("in_core2"),
             when(coalesce(col("ic"), lit(false)),
               col("m") - 1 + coalesce(col("cmr"), lit(0L))).otherwise(0L)
@@ -1284,8 +1187,6 @@ object Curation {
         handOffCheckpoint(surv)
         res
     }
-    handOffCheckpoint(sp)
-    out
   }
 
   // ---------------------------------------------------------------------
@@ -1313,8 +1214,8 @@ object Curation {
   def dedupGraphAssortativity(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     val d38 = DecimalType(38, 0)
-    // Optimization r11: the correlation sums fold on the COLLAPSED set
-    // graph. Every member of set S has the same degree
+    // Optimization r11: the correlation sums fold on the COLLAPSED
+    // [[SetGraph]]. Every member of set S has the same degree
     // D_S = (m_S − 1) + Σ_{T adj} m_T, so over the symmetrized doc-pair
     // edge list (the oracle's relation):
     //   m   = Σ_S m_S·D_S                      (directed edge count)
@@ -1325,55 +1226,19 @@ object Curation {
     // the doc-level aggregation and the final double expression is the
     // oracle's. Before: 5.6 s at sf0.1 (expanded + two degree joins over
     // the doc-pair list); after: see OPTIMIZATION_r11.md.
-    val (setPairs, groups) = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
-    val reliable = useReliableCheckpoint(s)
-    val sp = roundCheckpoint(setPairs
-      .select(array_min(col("ma")).as("sa"), array_min(col("mb")).as("sb")),
-      reliable)
-    // both directions read the materialized checkpoint — no second
-    // checkpoint needed (the driver fast path below collects sp directly)
-    val edges = sp.select(col("sa").as("src"), col("sb").as("dst"))
-      .unionByName(sp.select(col("sb").as("src"), col("sa").as("dst")))
-    val nodes = groups.select(array_min(col("members")).as("sid"),
-      size(col("members")).cast("long").as("m"))
-    val cmass = edges
-      .join(nodes.select(col("sid").as("dst"), col("m").as("md")), "dst")
-      .groupBy(col("src")).agg(sum(col("md")).as("cmass"))
-    val act = nodes
-      .join(cmass.withColumnRenamed("src", "sid"), Seq("sid"), "left")
-      .select(col("sid"), col("m"), coalesce(col("cmass"), lit(0L)).as("cmass"))
-      .filter(col("m") >= 2L || col("cmass") > 0L)
-      .withColumn("dg", col("m") - 1 + col("cmass"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(act)
-    // Driver fast path (the EdgeCollectCap convention): the folds are
-    // pure integer arithmetic over the collapsed graph — below the cap
-    // they run as exact BigInteger sums on the driver (bit-equal: the
-    // distributed DECIMAL(38,0) folds are the same integers, and below
-    // the cap no sum can approach the 10^38 overflow bound), and the
-    // final division reuses Spark's own expression over literals.
-    val smallAct =
-      if (EdgeCollectCap > 0)
-        Some(act.limit(EdgeCollectCap + 1).collect())
-          .filter(_.length <= EdgeCollectCap)
-      else None
-    val smallSp = smallAct.flatMap { _ =>
-      Some(sp.limit(EdgeCollectCap + 1).collect())
-        .filter(_.length <= EdgeCollectCap)
-    }
-    val out = (smallAct, smallSp) match {
-      case (Some(actRows), Some(spRows)) =>
+    val g = new SetGraph(s, dir)
+    g.small match {
+      case Some((actRows, adj)) =>
+        // Driver fast path: the folds are pure integer arithmetic — below
+        // the cap they run as exact BigInteger sums on the driver
+        // (bit-equal: the distributed DECIMAL(38,0) folds are the same
+        // integers, and below the cap no sum can approach the 10^38
+        // overflow bound), and the final division reuses Spark's own
+        // expression over literals.
         import java.math.BigInteger
         val m = actRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
         val dg = actRows.map(r => r.getLong(0) -> r.getLong(3)).toMap
-        val w = scala.collection.mutable.Map.empty[Long, BigInteger]
-        spRows.foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          val mda = BigInteger.valueOf(m(a)).multiply(BigInteger.valueOf(dg(a)))
-          val mdb = BigInteger.valueOf(m(b)).multiply(BigInteger.valueOf(dg(b)))
-          w(a) = w.getOrElse(a, BigInteger.ZERO).add(mdb)
-          w(b) = w.getOrElse(b, BigInteger.ZERO).add(mda)
-        }
+        def md(sid: Long) = BigInteger.valueOf(m(sid)).multiply(BigInteger.valueOf(dg(sid)))
         var mDir = 0L
         var sx = BigInteger.ZERO
         var sxx = BigInteger.ZERO
@@ -1381,12 +1246,12 @@ object Curation {
         actRows.foreach { r =>
           val sid = r.getLong(0)
           val (mi, di) = (BigInteger.valueOf(m(sid)), BigInteger.valueOf(dg(sid)))
+          val w = adj.getOrElse(sid, Nil).foldLeft(BigInteger.ZERO)((acc, t) => acc.add(md(t)))
           mDir += m(sid) * dg(sid)
           sx = sx.add(mi.multiply(di).multiply(di))
           sxx = sxx.add(mi.multiply(di).multiply(di).multiply(di))
           sxy = sxy.add(mi.multiply(di).multiply(
-            mi.subtract(BigInteger.ONE).multiply(di)
-              .add(w.getOrElse(sid, BigInteger.ZERO))))
+            mi.subtract(BigInteger.ONE).multiply(di).add(w)))
         }
         // identical final expression over literals (Decimal.toDouble is
         // BigDecimal.doubleValue — lit(java BigDecimal) reproduces it)
@@ -1398,19 +1263,20 @@ object Curation {
         s.range(1).select(lit(mDir).as("m_directed"),
           (round(when(lit(mDir) > 0L && dxL > 0,
             numL / (sqrt(dxL) * sqrt(dxL))), 6) + lit(0.0)).as("assortativity"))
-      case _ =>
+      case None =>
         // W_S = Σ_{T adj S} m_T·D_T (exact decimal; one set-edge join)
-        val g = act
-          .join(edges
+        val act = g.act
+        val gs = act
+          .join(g.edges
             .join(act.select(col("sid").as("dst"),
-              (col("m").cast(d38) * col("dg")).as("md")), "dst")
+              (col("m").cast(d38) * col("deg")).as("md")), "dst")
             .groupBy(col("src")).agg(sum(col("md")).as("w"))
             .withColumnRenamed("src", "sid"), Seq("sid"), "left")
-          .agg(coalesce(sum(col("m") * col("dg")), lit(0L)).as("m"),
-            sum(col("m").cast(d38) * col("dg") * col("dg")).as("sx"),
-            sum(col("m").cast(d38) * col("dg") * col("dg") * col("dg")).as("sxx"),
-            sum(col("m").cast(d38) * col("dg") *
-              ((col("m") - 1).cast(d38) * col("dg") +
+          .agg(coalesce(sum(col("m") * col("deg")), lit(0L)).as("m"),
+            sum(col("m").cast(d38) * col("deg") * col("deg")).as("sx"),
+            sum(col("m").cast(d38) * col("deg") * col("deg") * col("deg")).as("sxx"),
+            sum(col("m").cast(d38) * col("deg") *
+              ((col("m") - 1).cast(d38) * col("deg") +
                 coalesce(col("w"), lit(0L).cast(d38)))).as("sxy"))
         val num = (col("m").cast(d38) * col("sxy") - col("sx") * col("sx"))
           .cast("double")
@@ -1419,12 +1285,10 @@ object Curation {
         // dy == dx exactly (the directed edge set is symmetric, so sy = sx
         // and syy = sxx as integers on both engines) — the oracle's
         // sqrt(dx)·sqrt(dy) is bit-equal to sqrt(dx)·sqrt(dx)
-        g.select(col("m").as("m_directed"),
+        gs.select(col("m").as("m_directed"),
           (round(when(col("m") > 0L && dx > 0,
             num / (sqrt(dx) * sqrt(dx))), 6) + lit(0.0)).as("assortativity"))
     }
-    handOffCheckpoint(sp)
-    out
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

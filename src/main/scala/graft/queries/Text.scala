@@ -243,6 +243,146 @@ object Text {
     * any other absent code point). */
   private val BpeSep = "\u001f"
 
+  /** A BPE trainer's word-frequency dictionary, one row per distinct word:
+    * its frequency and its delimiter-wrapped symbol string (`⟨US⟩sym⟨US⟩`
+    * per symbol). [[bpeRounds]] runs the merges on the driver
+    * ([[DriverBpeDict]]) or in Spark ([[SparkBpeDict]]). */
+  private sealed trait BpeDict {
+    /** The argmax merge (pa, pb, n) and the dictionary after applying it;
+      * None when no word has two symbols left. */
+    def merge(): Option[(String, String, Long, BpeDict)]
+    /** Σ freq·|symbols| over the dictionary. */
+    def totalSymbols: Long
+    def release(): Unit
+  }
+
+  /** The merge's literal find/replace pair: non-overlapping left-to-right
+    * `replace` on the wrapped string is exactly BPE's greedy order. */
+  private def bpeReplace(pa: String, pb: String): (String, String) =
+    (BpeSep + pa + BpeSep + BpeSep + pb + BpeSep, BpeSep + pa + pb + BpeSep)
+
+  /** `trim(repr, BpeSep)` then `split(BpeSep+BpeSep, -1)` exactly as the
+    * distributed spelling (same Java regex engine, limit −1). */
+  private def bpeSyms(repr: String): Array[String] = {
+    var from = 0
+    var to = repr.length
+    while (from < to && repr.charAt(from) == BpeSep.charAt(0)) from += 1
+    while (to > from && repr.charAt(to - 1) == BpeSep.charAt(0)) to -= 1
+    repr.substring(from, to).split(BpeSep + BpeSep, -1)
+  }
+
+  /** The collected dictionary: a round is adjacent-pair frequency sums,
+    * argmax by (n desc, pa, pb) with the tie-break compared in UTF8
+    * BINARY order (Spark's string ordering — java String compareTo would
+    * diverge on supplementary code points), and the same literal replace
+    * — no Spark job at all. */
+  private final class DriverBpeDict(dict: Array[(Long, String)]) extends BpeDict {
+    def merge(): Option[(String, String, Long, BpeDict)] = {
+      import org.apache.spark.unsafe.types.UTF8String
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      dict.foreach { case (freq, repr) =>
+        val sy = bpeSyms(repr)
+        var i = 0
+        while (i < sy.length - 1) {
+          val k = (sy(i), sy(i + 1))
+          counts.update(k, counts.getOrElse(k, 0L) + freq)
+          i += 1
+        }
+      }
+      if (counts.isEmpty) None
+      else {
+        var best: ((String, String), Long) = null
+        counts.foreach { case (k, n) =>
+          val better = best == null || n > best._2 || (n == best._2 && {
+            val ca = UTF8String.fromString(k._1)
+              .compareTo(UTF8String.fromString(best._1._1))
+            ca < 0 || (ca == 0 && UTF8String.fromString(k._2)
+              .compareTo(UTF8String.fromString(best._1._2)) < 0)
+          })
+          if (better) best = (k, n)
+        }
+        val ((pa, pb), n) = best
+        val (find, repl) = bpeReplace(pa, pb)
+        Some((pa, pb, n,
+          new DriverBpeDict(dict.map { case (f, r) => (f, r.replace(find, repl)) })))
+      }
+    }
+    def totalSymbols: Long = dict.foldLeft(0L) { case (acc, (f, r)) => acc + f * bpeSyms(r).length }
+    def release(): Unit = ()
+  }
+
+  /** The persisted dictionary relation: a round is the pair rollup's
+    * one-row argmax collect (the model parameter being learned) and the
+    * merged dictionary, re-persisted and materialized; the caller
+    * releases the previous round's, so the lineage stays one round deep. */
+  private final class SparkBpeDict(dict: DataFrame) extends BpeDict {
+    def merge(): Option[(String, String, Long, BpeDict)] = {
+      val top = dict
+        .select(col("freq"), split(trim(col("repr"), BpeSep), BpeSep + BpeSep).as("sy"))
+        .filter(size(col("sy")) >= 2)
+        .select(col("freq"), explode(expr(
+          "transform(sequence(0, size(sy) - 2), i -> struct(sy[i] AS pa, sy[i+1] AS pb))"))
+          .as("p"))
+        .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
+        .agg(sum(col("freq")).as("n"))
+        .orderBy(col("n").desc, col("pa"), col("pb"))
+        .limit(1)
+        .collect()
+      top.headOption.map { t =>
+        val (pa, pb) = (t.getString(0), t.getString(1))
+        val (find, repl) = bpeReplace(pa, pb)
+        val next = dict.withColumn("repr",
+            org.apache.spark.sql.functions.replace(col("repr"), lit(find), lit(repl)))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        graft.core.QueryCaches.report(next)
+        next.count() // materialize before the caller drops this round's cache
+        (pa, pb, t.getLong(2), new SparkBpeDict(next))
+      }
+    }
+    def totalSymbols: Long = dict
+      .select(coalesce(sum(col("freq") *
+        size(split(trim(col("repr"), BpeSep), BpeSep + BpeSep))), lit(0L)))
+      .first().getLong(0)
+    def release(): Unit = dict.unpersist(false)
+  }
+
+  /** The BPE trainer both BPE queries run. The corpus collapses ONCE to
+    * its word-frequency dictionary (persisted across the size probe, so
+    * an overflowing probe does not re-tokenize the corpus); a dictionary
+    * that fits [[graft.operators.DriverCollect]]'s cap merges on the
+    * driver, a larger one in Spark. `start` sees the round-0 dictionary,
+    * `visit(round, pa, pb, n, dict)` each applied merge and the
+    * dictionary after it; the loop stops after [[BpeRounds]] merges or
+    * once no word has two symbols left. */
+  private def bpeRounds(s: SparkSession, dir: String)(start: BpeDict => Unit)(
+      visit: (Long, String, String, Long, BpeDict) => Unit): Unit = {
+    val wc = docs(s, dir)
+      .select(explode(words(col("text"))).as("word"))
+      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+      .select(col("freq"),
+        regexp_replace(col("word"), "(.)", BpeSep + "$1" + BpeSep).as("repr"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.core.QueryCaches.report(wc)
+    var dict: BpeDict = graft.operators.DriverCollect.collectSmall(wc) match {
+      case Some(rows) =>
+        wc.unpersist(false)
+        new DriverBpeDict(rows.map(r => (r.getLong(0), r.getString(1))))
+      case None => new SparkBpeDict(wc)
+    }
+    start(dict)
+    var round = 1
+    var exhausted = false
+    while (round <= BpeRounds && !exhausted) dict.merge() match {
+      case None => exhausted = true
+      case Some((pa, pb, n, next)) =>
+        dict.release()
+        dict = next
+        visit(round.toLong, pa, pb, n, dict)
+        round += 1
+    }
+    dict.release()
+  }
+
   /**
    * Iterative BPE training (Sennrich et al. 2016 §3.2, the full loop) —
    * [[bpePairCounts]] is one generation of the statistic; this runs the
@@ -263,146 +403,17 @@ object Text {
    * (`[a,a,a,a]` + merge(a,a) → `[aa,aa]`, not `[aa,a,a]`). The argmax
    * collect per round is ONE row — the model parameter being learned —
    * and each round's dictionary is re-persisted and the previous
-   * released, so the lineage stays one round deep.
+   * released, so the lineage stays one round deep. A dictionary within
+   * the driver-collect cap runs every round on the driver instead, with
+   * no per-round job at all ([[bpeRounds]]).
    */
-  /** Driver fast-path cap for the BPE loops (the
-    * [[Curation.connectedComponents]] EdgeCollectCap convention): a
-    * word-frequency dictionary at or below this many rows is collected
-    * and the merge rounds run on the driver; above it the distributed
-    * per-round loop runs unchanged. */
-  private val BpeCollectCap = 1 << 20
-
-  /** The initial (freq, delimiter-wrapped repr) dictionary, collected if
-    * metadata-sized. The wrap regex runs in Spark (same engine either
-    * path). */
-  private def bpeDriverDict(s: SparkSession, dir: String,
-      cap: Int): Option[Array[(Long, String)]] = {
-    val rows = docs(s, dir)
-      .select(explode(words(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .select(col("freq"),
-        regexp_replace(col("word"), "(.)", BpeSep + "$1" + BpeSep).as("repr"))
-      .limit(cap + 1).collect()
-    if (rows.length <= cap) Some(rows.map(r => (r.getLong(0), r.getString(1))))
-    else None
-  }
-
-  /** `trim(repr, BpeSep)` then `split(BpeSep+BpeSep, -1)` exactly as the
-    * distributed spelling (same Java regex engine, limit −1). */
-  private def bpeSyms(repr: String): Array[String] = {
-    var from = 0
-    var to = repr.length
-    while (from < to && repr.charAt(from) == BpeSep.charAt(0)) from += 1
-    while (to > from && repr.charAt(to - 1) == BpeSep.charAt(0)) to -= 1
-    repr.substring(from, to).split(BpeSep + BpeSep, -1)
-  }
-
-  /** One driver BPE round over the dictionary: adjacent-pair frequency
-    * sums, argmax by (n desc, pa, pb) with the tie-break compared in UTF8
-    * BINARY order (Spark's string ordering — java String compareTo would
-    * diverge on supplementary code points), and the same literal
-    * non-overlapping replace. None when no word has ≥ 2 symbols. */
-  private def bpeDriverRound(dict: Array[(Long, String)])
-      : Option[(String, String, Long, Array[(Long, String)])] = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-    dict.foreach { case (freq, repr) =>
-      val sy = bpeSyms(repr)
-      if (sy.length >= 2) {
-        var i = 0
-        while (i < sy.length - 1) {
-          val k = (sy(i), sy(i + 1))
-          counts.update(k, counts.getOrElse(k, 0L) + freq)
-          i += 1
-        }
-      }
-    }
-    if (counts.isEmpty) None
-    else {
-      var best: ((String, String), Long) = null
-      counts.foreach { case (k, n) =>
-        val better = best == null || n > best._2 || (n == best._2 && {
-          val ca = UTF8String.fromString(k._1)
-            .compareTo(UTF8String.fromString(best._1._1))
-          ca < 0 || (ca == 0 && UTF8String.fromString(k._2)
-            .compareTo(UTF8String.fromString(best._1._2)) < 0)
-        })
-        if (better) best = (k, n)
-      }
-      val ((pa, pb), n) = best
-      val find = BpeSep + pa + BpeSep + BpeSep + pb + BpeSep
-      val repl = BpeSep + pa + pb + BpeSep
-      Some((pa, pb, n, dict.map { case (f, r) => (f, r.replace(find, repl)) }))
-    }
-  }
-
   def bpeTrainMerges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // Optimization r11: the dictionary is vocab-bounded — when it fits
-    // the collect cap the whole merge loop runs on the driver (one job
-    // total instead of ~3 per round). Semantics replicated exactly; the
-    // distributed loop below is the >cap fallback, unchanged.
-    bpeDriverDict(s, dir, BpeCollectCap) match {
-      case Some(d0) =>
-        var dict = d0
-        val merges = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, String, String, String, Long)]
-        var round = 1
-        var exhausted = false
-        while (round <= BpeRounds && !exhausted) {
-          bpeDriverRound(dict) match {
-            case None => exhausted = true
-            case Some((pa, pb, n, nd)) =>
-              merges += ((round.toLong, pa, pb, pa + pb, n))
-              dict = nd
-              round += 1
-          }
-        }
-        return merges.toSeq.toDF("round", "left_sym", "right_sym", "merged", "n")
-          .orderBy(col("round"))
-      case None => ()
+    val merges = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, String, String, String, Long)]
+    bpeRounds(s, dir)(_ => ()) { (round, pa, pb, n, _) =>
+      merges += ((round, pa, pb, pa + pb, n))
     }
-    import org.apache.spark.storage.StorageLevel
-    val wc = docs(s, dir)
-      .select(explode(words(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-    var cur = wc.select(col("freq"),
-        regexp_replace(col("word"), "(.)", BpeSep + "$1" + BpeSep).as("repr"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(cur)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
-    var round = 1
-    var exhausted = false
-    while (round <= BpeRounds && !exhausted) {
-      val syms = cur.select(col("freq"),
-          split(trim(col("repr"), BpeSep), BpeSep + BpeSep).as("sy"))
-        .filter(size(col("sy")) >= 2)
-      val top = syms
-        .select(col("freq"), explode(expr(
-          "transform(sequence(0, size(sy) - 2), i -> struct(sy[i] AS pa, sy[i+1] AS pb))"))
-          .as("p"))
-        .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("pa"), col("pb"))
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (pa, pb, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((round.toLong, pa, pb, pa + pb, n))
-        val find = BpeSep + pa + BpeSep + BpeSep + pb + BpeSep
-        val repl = BpeSep + pa + pb + BpeSep
-        val next = cur.withColumn("repr",
-            org.apache.spark.sql.functions.replace(col("repr"), lit(find), lit(repl)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        graft.core.QueryCaches.report(next)
-        next.count() // materialize before dropping the parent round's cache
-        cur.unpersist(false)
-        cur = next
-        round += 1
-      }
-    }
-    cur.unpersist(false)
     merges.toSeq.toDF("round", "left_sym", "right_sym", "merged", "n")
       .orderBy(col("round"))
   }
@@ -728,82 +739,11 @@ object Text {
    */
   def bpeCompressionCurve(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // Optimization r11: same driver fast path as [[bpeTrainMerges]] — the
-    // per-round totals are Σ freq·|symbols| over the collected dictionary.
-    bpeDriverDict(s, dir, BpeCollectCap) match {
-      case Some(d0) =>
-        var dict = d0
-        def totalSyms(d: Array[(Long, String)]): Long =
-          d.foldLeft(0L) { case (acc, (f, r)) => acc + f * bpeSyms(r).length }
-        val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        val t0d = totalSyms(dict)
-        curve += ((0L, t0d))
-        var rnd = 1
-        var exhausted = false
-        while (rnd <= BpeRounds && !exhausted) {
-          bpeDriverRound(dict) match {
-            case None => exhausted = true
-            case Some((_, _, _, nd)) =>
-              dict = nd
-              curve += ((rnd.toLong, totalSyms(dict)))
-              rnd += 1
-          }
-        }
-        return curve.toSeq.toDF("round", "total_symbols")
-          .select(col("round"), col("total_symbols"),
-            round(when(lit(t0d) > 0L,
-              col("total_symbols").cast("double") / lit(t0d).cast("double")), 6)
-              .as("compression"))
-          .orderBy(col("round"))
-      case None => ()
-    }
-    import org.apache.spark.storage.StorageLevel
-    val wc = docs(s, dir)
-      .select(explode(words(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-    var cur = wc.select(col("freq"),
-        regexp_replace(col("word"), "(.)", BpeSep + "$1" + BpeSep).as("repr"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(cur)
-    def totalSyms(df: DataFrame): Long = df
-      .select(coalesce(sum(col("freq") *
-        size(split(trim(col("repr"), BpeSep), BpeSep + BpeSep))), lit(0L)))
-      .first().getLong(0)
     val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val t0 = totalSyms(cur)
-    curve += ((0L, t0))
-    var rnd = 1
-    var exhausted = false
-    while (rnd <= BpeRounds && !exhausted) {
-      val syms = cur.select(col("freq"),
-          split(trim(col("repr"), BpeSep), BpeSep + BpeSep).as("sy"))
-        .filter(size(col("sy")) >= 2)
-      val top = syms
-        .select(col("freq"), explode(expr(
-          "transform(sequence(0, size(sy) - 2), i -> struct(sy[i] AS pa, sy[i+1] AS pb))"))
-          .as("p"))
-        .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("pa"), col("pb"))
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (pa, pb) = (top(0).getString(0), top(0).getString(1))
-        val find = BpeSep + pa + BpeSep + BpeSep + pb + BpeSep
-        val repl = BpeSep + pa + pb + BpeSep
-        val next = cur.withColumn("repr",
-            org.apache.spark.sql.functions.replace(col("repr"), lit(find), lit(repl)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        graft.core.QueryCaches.report(next)
-        next.count()
-        cur.unpersist(false)
-        cur = next
-        curve += ((rnd.toLong, totalSyms(cur)))
-        rnd += 1
-      }
+    bpeRounds(s, dir)(d0 => curve += ((0L, d0.totalSymbols))) { (round, _, _, _, dict) =>
+      curve += ((round, dict.totalSymbols))
     }
-    cur.unpersist(false)
+    val t0 = curve.head._2
     curve.toSeq.toDF("round", "total_symbols")
       .select(col("round"), col("total_symbols"),
         round(when(lit(t0) > 0L,

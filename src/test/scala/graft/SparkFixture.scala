@@ -14,6 +14,17 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 
   def tmpSfDir(): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory("graft_test_sf")
+
+  /** Runs `body` with `spark.graft.driverCollectCap` set to `cap` (0
+    * forces every size-switched operator onto its distributed branch),
+    * restoring the previous setting afterwards. */
+  def withDriverCollectCap[T](cap: Long)(body: => T): T = {
+    val key = graft.operators.DriverCollect.CapKey
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, cap.toString)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkFixture {

@@ -13,14 +13,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class CurationSpec extends AnyFunSuite with SparkFixture {
 
   private def components(nodes: Seq[Long], edges: Seq[(Long, Long)],
-      edgeCollectCap: Long = 0L): Map[Long, Long] = {
+      driverCollectCap: Long = 0L): Map[Long, Long] = withDriverCollectCap(driverCollectCap) {
     // cap 0 forces the distributed propagation path; tests cover the
     // driver union-find fast path separately
     val docs = spark.createDataFrame(nodes.map(Tuple1(_))).toDF("doc_id")
     val pairs = if (edges.isEmpty)
       spark.createDataFrame(Seq.empty[(Long, Long)]).toDF("da", "db")
     else spark.createDataFrame(edges).toDF("da", "db")
-    Curation.connectedComponents(docs, pairs, edgeCollectCap)
+    Curation.connectedComponents(docs, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -74,7 +74,7 @@ class CurationSpec extends AnyFunSuite with SparkFixture {
     val n = 1000L
     val nodes = 1L to n
     val edges = (1L until n).map(i => (i, i + 1))
-    val got = components(nodes, edges, edgeCollectCap = 0L)
+    val got = components(nodes, edges)
     assert(got.size == n.toInt)
     assert(got.values.forall(_ == 1L), s"split labels: ${got.filter(_._2 != 1L).take(5)}")
   }
@@ -104,8 +104,8 @@ class CurationSpec extends AnyFunSuite with SparkFixture {
     val edges = Seq((4L, 5L), (3L, 4L), (2L, 3L), (1L, 2L), // chain
       (10L, 11L), (11L, 12L), (10L, 12L), // triangle
       (30L, 20L)) // out-of-order pair
-    val dist = components(nodes, edges, edgeCollectCap = 0L)
-    val fast = components(nodes, edges, edgeCollectCap = 1000L)
+    val dist = components(nodes, edges)
+    val fast = components(nodes, edges, driverCollectCap = 1000L)
     assert(fast == dist)
     assert(fast(5L) == 1L && fast(12L) == 10L && fast(30L) == 20L && fast(39L) == 39L)
   }
@@ -363,80 +363,6 @@ class CurationSpec extends AnyFunSuite with SparkFixture {
     // hub never peels) — a shape where intra and cross mass interact
     kcoreSuperVsDoc(Seq((1L, 2L), (2L, 1L), (3L, 1L), (4L, 1L)),
       Seq((1L, 2L), (1L, 3L), (1L, 4L)))
-  }
-
-  test("dedupGraphKcore: driver fast path ≡ forced distributed peel") {
-    // a corpus with an identical-doc clique (m=3), a near-dup cross edge,
-    // and a pendant — the full output (deg0 / in_core2 / core_deg /
-    // converged) must be identical whichever path computes it
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("kcorefp")
-    val clique = "p q r s t u v w x y"
-    val rows = Seq(
-      (1L, clique, "en", "s1"), (2L, clique, "en", "s1"), (3L, clique, "en", "s1"),
-      (4L, "p q r s t u v w x", "en", "s1"), // J = 9/10 vs the clique set
-      (5L, "lonely words here", "en", "s2"))
-      .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    writeTable(dir, "documents",
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars"))
-    val fast = Curation.dedupGraphKcore(spark, dir.toString).collect().toSeq
-    val dist = Curation.dedupGraphKcoreImpl(spark, dir.toString, 0L).collect().toSeq
-    assert(fast == dist, s"fast $fast != distributed $dist")
-    assert(fast.nonEmpty && fast.forall(_.getBoolean(4)), "expected convergence")
-  }
-
-  test("dedupGraphTriangles: driver fast path ≡ forced distributed enumeration") {
-    // a triangle of near-dup sets plus an identical-doc clique (outside
-    // the triangle count by design) — counts, caps and the coefficient
-    // must match whichever path computes them
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("trifp")
-    // x,y,z pairwise Jaccard ≥ 0.8 (triangle); w,w dup clique (no cross)
-    val x = "a b c d e f g h i j k l m n o p q r s t"       // 20 words
-    val y = "a b c d e f g h i j k l m n o p q r s"         // 19: J=19/20
-    val z = "a b c d e f g h i j k l m n o p q r s t u"     // 21: J(x,z)=20/21, J(y,z)=19/21≈0.905
-    val rows = Seq(
-      (1L, x, "en", "s1"), (2L, y, "en", "s1"), (3L, z, "en", "s1"),
-      (4L, "aa bb cc dd ee", "en", "s2"), (5L, "aa bb cc dd ee", "en", "s2"))
-      .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    writeTable(dir, "documents",
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars"))
-    val fast = Curation.dedupGraphTriangles(spark, dir.toString).collect().toSeq
-    spark.catalog.clearCache()
-    val dist = Curation.dedupGraphTrianglesImpl(spark, dir.toString, 0L).collect().toSeq
-    assert(fast == dist, s"fast $fast != distributed $dist")
-    assert(fast.head.getLong(3) == 1L, s"expected 1 triangle, got ${fast.head}")
-  }
-
-  test("pagerank driver fast path ≡ forced distributed iteration") {
-    // the r11 driver fast path replays Spark's exact rounding chain
-    // (valueOf → setScale HALF_UP → doubleValue); every rank must be
-    // bit-identical to the distributed DECIMAL iteration
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("prfp")
-    val clique = "p q r s t u v w x y"
-    val rows = Seq(
-      (1L, clique, "en", "s1"), (2L, clique, "en", "s1"), (3L, clique, "en", "s1"),
-      (4L, "p q r s t u v w x", "en", "s1"),
-      (5L, "lonely words here", "en", "s2"))
-      .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    writeTable(dir, "documents",
-      rows.toDF("doc_id", "text", "lang", "source", "n_chars"))
-    def run(cap: Long) = {
-      spark.catalog.clearCache()
-      val nDocs = Tables.load(spark, dir.toString, "documents").count()
-      val (setPairs, groups) =
-        Dedup.jaccardSetGraph(Dedup.docWords(spark, dir.toString))
-      val spMin = setPairs
-        .select(array_min(col("ma")).as("sa"), array_min(col("mb")).as("sb"))
-      Curation.pagerankFromGraph(spark, dir.toString, spMin, groups, nDocs, cap)
-        .collect().toSeq
-    }
-    graft.functions.GraftFunctions.register(spark)
-    val fast = run(Curation.testEdgeCollectCap)
-    val dist = run(0L)
-    assert(fast == dist, s"fast $fast != distributed $dist")
-    assert(fast.nonEmpty)
   }
 
   test("dedupGraphAssortativity: star graph reports r = −1") {
