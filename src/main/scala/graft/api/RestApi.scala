@@ -214,10 +214,10 @@ final class RestApi(registry: Dag.Registry,
     val s = spark().getOrElse(
       throw new IllegalArgumentException("variables endpoint needs an engine session"))
     val ga = params.get("ga_dir").map { dir =>
-      // owned: the discovery query persists its pruned events slice; the
-      // collect below is the one action, after which the cache is released
-      val rows = graft.core.QueryCaches.owned(s)(
-        graft.queries.Ml.mlVariableDiscovery(s, dir)).collect()
+      // the discovery query caches its pruned events slice until collected
+      val scope = new graft.core.QueryCaches.CacheScope
+      val rows = try scope(graft.queries.Ml.mlVariableDiscovery(s, dir).collect())
+        finally scope.release()
       if (rows.isEmpty) throw new IllegalArgumentException(
         "GA4 dataset does not include expected events tables. " +
           "Check configuration (source dir and timespan) and try again.")

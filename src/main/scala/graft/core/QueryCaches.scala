@@ -4,33 +4,36 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 /**
- * Cache-lifetime ownership for query-built DataFrames (VERDICT r06 nit 1).
+ * Cache-lifetime ownership for query-built DataFrames.
  *
- * Several query compositions persist an intermediate because more than one
+ * Several compositions persist an intermediate because more than one
  * consumer inside ONE action would otherwise re-execute it (the ML events
  * slice, the two-pass rank materialization, the collapsed dedup universe),
  * and the iterative-components loop leaves its final round as a
  * checkpointed RDD. A lazy DataFrame cannot release those itself —
  * unpersisting before the caller's action would undo the persist — so
- * ownership must sit with whoever knows when the action is over:
+ * ownership sits with whoever knows when the action is over, through one
+ * path:
  *
- *  - long-lived schedulers ([[graft.workers.MlModelJobs]]) thread a
- *    [[CacheScope]] through the build explicitly and `release()` after
- *    materializing their output table;
- *  - the `SparkEntry.queries` map (driver contract: a `(session, dir) =>
- *    DataFrame` with exactly one materializing action per constructed
- *    relation) wraps each build in [[owned]], which exposes a THREAD-LOCAL
- *    scope that persisting components report into by default (via
- *    [[report]] / [[reportRdd]] — so every component in the repo
- *    participates without explicit threading at each of its call sites)
- *    and registers a one-shot listener that unpersists the collected
- *    caches as soon as the FIRST action over the returned plan completes —
- *    success or failure. The harness's `clearCache()` between queries
- *    remains a convenience, not the ownership mechanism, so embedding
- *    these queries in a long-lived server no longer accumulates dead
- *    cached relations.
+ *  - components persist with [[cached]] (and hand checkpoint RDDs over
+ *    with [[reportRdd]]), which registers the relation with the
+ *    [[CacheScope]] active on the current thread, if any;
+ *  - an owner activates a scope around its build (`scope { build }`) and
+ *    calls `release()` once the output is materialized. Long-lived
+ *    callers — the scheduled ML and corpus workers, the REST `variables`
+ *    endpoint — release in a `finally`, streaming callers after `stop()`;
+ *  - [[owned]] (every `SparkEntry.queries` build, whose driver contract is
+ *    one materializing action per constructed relation) activates a fresh
+ *    scope and releases it after the FIRST action over the returned plan
+ *    completes — success or failure — or at once if the build throws.
+ *
+ * Scopes nest: an inner scope takes the reports of its own body only.
+ * [[cached]] with no active scope persists and registers nowhere (the
+ * caller owns the cache). A persist a function releases itself stays a
+ * local persist/unpersist pair with the unpersist in a `finally`.
  *
  * Contract of [[owned]]: one materializing action per constructed
  * DataFrame. Re-running an action on the SAME object after the first
@@ -42,42 +45,51 @@ import org.apache.spark.sql.util.QueryExecutionListener
  */
 object QueryCaches {
 
-  /** Per-job cache collector (the MlModelJobs tracker, promoted to core):
-    * `collect` every relation a build persists, `release` after the job's
-    * output is materialized. */
+  /** The relations one job persists: activate it around the build with
+    * `scope { ... }`, `release()` after the job's output is materialized. */
   final class CacheScope {
     private val pending = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    def collect(df: DataFrame): Unit = synchronized { pending += (() => df.unpersist(false)) }
-    def collectRdd(rdd: RDD[_]): Unit = synchronized { pending += (() => { rdd.unpersist(false); () }) }
+    private[QueryCaches] def add(free: () => Unit): Unit = synchronized { pending += free }
     def isEmpty: Boolean = synchronized(pending.isEmpty)
     def release(): Unit = synchronized {
       pending.foreach(f => try f() catch { case _: Throwable => () })
       pending.clear()
     }
+
+    /** Runs `body` with this scope active on the current thread (not on
+      * threads `body` starts); the enclosing scope is restored after. */
+    def apply[T](body: => T): T = {
+      val outer = active.get
+      active.set(this)
+      try body finally active.set(outer)
+    }
   }
 
-  // the scope of the `owned` build currently running on this thread, if
-  // any — query construction is synchronous driver-side code, so a
-  // DynamicVariable is exactly the right carrier
-  private val active = new scala.util.DynamicVariable[Option[CacheScope]](None)
+  // query construction is synchronous driver-side code, so the active
+  // scope is a property of the thread building the plan
+  private val active = new ThreadLocal[CacheScope]
 
-  /** Default cache-report hook for persisting components: hand the persist
-    * to the enclosing [[owned]] build's scope. Outside any `owned` build
-    * this is a no-op — explicit callers (MlModelJobs) pass their own
-    * collector instead. */
-  def report(df: DataFrame): Unit = active.value.foreach(_.collect(df))
+  /** Persists `df` (memory with disk spill) and registers it with the
+    * active scope, which unpersists it on release. */
+  def cached(df: DataFrame): DataFrame = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    register(() => df.unpersist(false))
+    df
+  }
 
-  /** [[report]] for RDD-level caches (localCheckpoint/checkpoint blocks —
-    * the iterative-components round state). */
-  def reportRdd(rdd: RDD[_]): Unit = active.value.foreach(_.collectRdd(rdd))
+  /** Registers an RDD-level cache (localCheckpoint/checkpoint blocks — the
+    * iterative-components round state) with the active scope. */
+  def reportRdd(rdd: RDD[_]): Unit = register(() => { rdd.unpersist(false); () })
 
-  /** Build a query DataFrame whose persisted intermediates are released
-    * automatically after the first completed action over the returned
-    * plan. Builds that persist nothing pay nothing (no listener is
-    * registered). */
+  private def register(free: () => Unit): Unit = Option(active.get).foreach(_.add(free))
+
+  /** Builds a query DataFrame whose cached intermediates are released
+    * after the first completed action over the returned plan, or at once
+    * if the build throws. Builds that cache nothing pay nothing (no
+    * listener is registered). */
   def owned(s: SparkSession)(build: => DataFrame): DataFrame = {
     val scope = new CacheScope
-    val df = active.withValue(Some(scope))(build)
+    val df = try scope(build) catch { case t: Throwable => scope.release(); throw t }
     if (!scope.isEmpty) releaseAfterFirstAction(s, df, scope)
     df
   }
@@ -87,7 +99,7 @@ object QueryCaches {
     * by object identity first (DataFrameWriter and direct actions reuse
     * the Dataset's analyzed plan object) with a canonicalized
     * `sameResult` fallback for commands that re-analyze. */
-  def releaseAfterFirstAction(s: SparkSession, df: DataFrame, scope: CacheScope): Unit = {
+  private def releaseAfterFirstAction(s: SparkSession, df: DataFrame, scope: CacheScope): Unit = {
     val target = df.queryExecution.analyzed
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     lazy val listener: QueryExecutionListener = new QueryExecutionListener {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataTypes
+import graft.core.QueryCaches.cached
 
 /**
  * The add-one-smoothed bigram language model every LM scorer shares —
@@ -83,15 +84,14 @@ object BigramLm {
 
   /** Fits the model on a documents relation carrying `text`: `keys`
     * (expressions over `docs`) ride along as pair keys. Returns the pair
-    * multiplicities — persisted and reported to the enclosing
-    * [[graft.core.QueryCaches]] scope, as the model tables, the vocabulary
+    * multiplicities — cached in the active [[graft.core.QueryCaches]]
+    * scope, as the model tables, the vocabulary
     * action and any scoring join over them all read it — and the model.
     * The corpus is tokenized once: the vocabulary action materializes the
     * pairs. */
   def fit(docs: DataFrame, keys: Column*): (DataFrame, Model) = {
     val p = pairs(docs.select(keys :+ graft.queries.Text.words(col("text")).as("ws"): _*))
-      .persist()
-    graft.core.QueryCaches.report(p)
+      .transform(cached)
     (p, Model.of(p, vocabulary(docs, p)))
   }
 

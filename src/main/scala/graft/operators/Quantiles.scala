@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.core.QueryCaches.cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Distributed exact global ranking / NTILE.
@@ -26,6 +28,20 @@ import org.apache.spark.sql.functions._
  * well-defined and reproducible.
  */
 object Quantiles {
+
+  /** Runs `f` with `df` persisted, unpersisting it when `f` returns or
+    * throws. `repartitionByRange` runs a range-boundary SAMPLING job
+    * before the shuffle — without this persist the entire upstream plan
+    * (often an expensive multi-join composition) executes twice, once for
+    * the sampler and once for the real pass. An input the caller already
+    * persisted is used as-is and left alone (unpersisting it here would
+    * silently drop a cache the caller still depends on). */
+  private def withTransientInput[T](df: DataFrame)(f: DataFrame => T): T =
+    if (df.storageLevel != StorageLevel.NONE) f(df)
+    else {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      try f(df) finally df.unpersist(false)
+    }
 
   /** Adds `rankCol` (1-based global rank) and `totalCol` (total row count)
     * under the given total order, fully distributed.
@@ -52,43 +68,25 @@ object Quantiles {
     * documented layout) — size `spark.sql.shuffle.partitions` so no range
     * partition exceeds ~8.5e9 rows. */
   def withGlobalRank(df: DataFrame, order: Seq[Column],
-      rankCol: String, totalCol: String,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame = {
+      rankCol: String, totalCol: String): DataFrame = {
     Seq("__mid", "__pid", "__lrn").foreach(h => require(!df.columns.contains(h),
       s"withGlobalRank: input must not contain helper column '$h'"))
     val parts = df.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
       .map(_.toInt).getOrElse(df.rdd.getNumPartitions)
-    // `repartitionByRange` runs a range-boundary SAMPLING job before the
-    // shuffle — without this persist the entire upstream plan (here often
-    // an expensive multi-join composition) executes twice, once for the
-    // sampler and once for the real pass. The input cache lives only until
-    // the ranged relation is materialized below — UNLESS the caller
-    // already persisted the input, in which case their cache is used
-    // as-is and left alone (unpersisting it here would silently drop a
-    // cache the caller still depends on).
-    val callerCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cachedIn =
-      if (callerCached) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ranged = cachedIn.repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", shiftrightunsigned(col("__mid"), 33).cast("int"))
-      .withColumn("__lrn", col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1)
-      .drop("__mid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    if (!callerCached)
-      cachedIn.unpersist(false) // ranged is materialized; the input cache is done
-    // NOTE: `ranged` itself stays persisted for the lifetime of the
-    // returned plan — the per-partition offsets were computed against this
-    // exact materialization, and a re-execution could range-partition rows
-    // differently. Callers running many rank computations in one session
-    // should clearCache() between them (Verify/Bench do); long-lived
-    // callers collect it via `onCache` and unpersist after materializing.
-    onCache(ranged)
+    // `ranged` stays cached for the lifetime of the returned plan, owned
+    // by the active scope ([[graft.core.QueryCaches]]) — the per-partition
+    // offsets were computed against this exact materialization, and a
+    // re-execution could range-partition rows differently.
+    val (ranged, cnts) = withTransientInput(df) { in =>
+      val ranged = cached(in.repartitionByRange(parts, order: _*)
+        .sortWithinPartitions(order: _*)
+        .withColumn("__mid", monotonically_increasing_id())
+        .withColumn("__pid", shiftrightunsigned(col("__mid"), 33).cast("int"))
+        .withColumn("__lrn", col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1)
+        .drop("__mid"))
+      (ranged, ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
+    }
     val offsets = cnts.map(_._1).zip(cnts.map(_._2).scanLeft(0L)(_ + _)).toMap
     val total = cnts.map(_._2).sum
     ranged
@@ -125,7 +123,7 @@ object Quantiles {
    * window each document starts in.
    */
   def withRunningTotal(df: DataFrame, order: Seq[Column], valueCol: String,
-      out: String, onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame = {
+      out: String): DataFrame = {
     require(!df.columns.contains(out),
       s"withRunningTotal: input already contains output column '$out'")
     require(df.schema(valueCol).dataType ==
@@ -133,21 +131,16 @@ object Quantiles {
       s"withRunningTotal: '$valueCol' must be LONG (exact integer prefix sums)")
     val parts = df.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
       .map(_.toInt).getOrElse(df.rdd.getNumPartitions)
-    val callerCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cachedIn =
-      if (callerCached) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ranged = cachedIn.repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-partition sums → prefix offsets (#partitions rows — metadata)
-    val sums = ranged
-      .groupBy(spark_partition_id().as("__pid"))
-      .agg(coalesce(sum(col(valueCol)), lit(0L)).as("__s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    if (!callerCached) cachedIn.unpersist(false)
-    onCache(ranged) // same cache contract as withGlobalRank
+    // same input and `ranged` cache contract as withGlobalRank
+    val (ranged, sums) = withTransientInput(df) { in =>
+      val ranged = cached(in.repartitionByRange(parts, order: _*)
+        .sortWithinPartitions(order: _*))
+      // per-partition sums → prefix offsets (#partitions rows — metadata)
+      (ranged, ranged
+        .groupBy(spark_partition_id().as("__pid"))
+        .agg(coalesce(sum(col(valueCol)), lit(0L)).as("__s"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
+    }
     val offsets = sums.map(_._1).zip(sums.map(_._2).scanLeft(0L)(_ + _)).toMap
     val idx = ranged.schema.fieldIndex(valueCol)
     val outSchema = ranged.schema.add(out, org.apache.spark.sql.types.LongType)
@@ -165,11 +158,10 @@ object Quantiles {
   }
 
   /** `ntile(n) OVER (ORDER BY order*)` as a distributed computation. */
-  def withNtile(df: DataFrame, n: Int, order: Seq[Column], out: String,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame = {
+  def withNtile(df: DataFrame, n: Int, order: Seq[Column], out: String): DataFrame = {
     Seq("__rank", "__total").foreach(h => require(!df.columns.contains(h),
       s"withNtile: input must not contain helper column '$h'"))
-    withGlobalRank(df, order, "__rank", "__total", onCache)
+    withGlobalRank(df, order, "__rank", "__total")
       .withColumn(out, ntileFromRank(col("__rank"), col("__total"), n))
       .drop("__rank", "__total")
   }

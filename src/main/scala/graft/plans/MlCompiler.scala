@@ -293,19 +293,15 @@ object MlCompiler {
    * fpv-shaped relation (see [[firstPartyCte]]) joined in as the
    * combined-source `user_variables` branch (`model_bqml.sql:201-207`);
    * GA events are then pre-filtered to its ids (`model_bqml.sql:104-108`).
-   */
-  /**
-   * @param onCache invoked with every relation this build persists (the
-   *                shared events window slice). One-shot callers can
-   *                ignore it (Verify/Bench clearCache between queries);
-   *                LONG-LIVED callers — the scheduled ML workers — must
-   *                collect these and unpersist after materializing the
-   *                result, or each nightly run leaks a cached copy of the
-   *                events slice for the life of the session.
+   *
+   * The shared events window slice is persisted through
+   * [[graft.core.QueryCaches.cached]], so it belongs to the caller's
+   * active scope: LONG-LIVED callers — the scheduled ML workers — release
+   * that scope once the result is materialized, or each nightly run would
+   * leak a cached copy of the slice for the life of the session.
    */
   def dataset(s: SparkSession, ga4: DataFrame, cfg: MlModel, step: Step,
-      firstParty: Option[DataFrame] = None,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame = {
+      firstParty: Option[DataFrame] = None): DataFrame = {
     GraftFunctions.register(s)
     var ev = eventsCte(ga4, cfg, step)
     firstParty.foreach { fpv =>
@@ -321,13 +317,9 @@ object MlCompiler {
     // query; MEMORY_AND_DISK spills instead of OOMing at scale. The
     // explicit repartition also survives AQE (a coalesced tiny exchange
     // would serialize the window/agg work on one core). The cache lives
-    // as long as the returned plan may be re-executed — callers looping
-    // over many models should spark.catalog.clearCache() between models
-    // (Verify/Bench do).
+    // until the owning scope is released.
     val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
-    ev = ev.repartition(parts, col("unique_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onCache(ev)
+    ev = graft.core.QueryCaches.cached(ev.repartition(parts, col("unique_id")))
     val fe = firstEngagement(ev, cfg)
     val av = analyticsVariables(ev, fe, cfg)
     val uv = firstParty match {
@@ -447,11 +439,10 @@ object MlCompiler {
    * `probability` must be a column of the input (the reference feeds
    * ML.PREDICT output; callers plug in the model's scores).
    */
-  def conversionValues(s: SparkSession, preds: DataFrame, cfg: MlModel,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame = {
+  def conversionValues(s: SparkSession, preds: DataFrame, cfg: MlModel): DataFrame = {
     val n = cfg.conversionRateSegments
     val seg = Quantiles.withNtile(preds, n,
-      Seq(col("probability"), col("unique_id")), "normalized_probability", onCache)
+      Seq(col("probability"), col("unique_id")), "normalized_probability")
     // LAG/LEAD runs over the aggregated #segments-row relation —
     // metadata-sized, single partition is the correct plan (the
     // data-derived constant key survives constant folding, so no

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Tables._
 import graft.functions.GraftFunctions
+import graft.core.QueryCaches.cached
 
 /**
  * Corpus-preparation operators for the large-scale training-data pipeline
@@ -355,8 +356,7 @@ object Corpus {
       .select(explode(Text.words(col("text"))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("cnt"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     // total token mass: metadata-sized driver scalar (same convention as
     // textTfidfTopk's corpus row count); tf is cached so the prefix-sum
     // pass below reuses it rather than re-running the explode
@@ -904,8 +904,7 @@ object Corpus {
     val sw = docs(s, dir)
       .select(col("source"), explode(Text.words(col("text"))).as("word"))
       .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cs"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val wc = sw.groupBy(col("word")).agg(sum(col("cs")).as("c"))
     val ns = sw.groupBy(col("source"))
       .agg(sum(col("cs")).as("n_tokens"), count(lit(1)).as("n_vocab"))

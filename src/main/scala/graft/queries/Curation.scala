@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Corpus-curation operators (builder brief §dedup/§text): the pieces that
@@ -117,7 +118,7 @@ object Curation {
 
   /** The FINAL round's checkpoint RDD backs the returned plan for its
     * whole lifetime — hand its release to the enclosing query scope
-    * (QueryCaches.owned unpersists it after the caller's first action). */
+    * (the active QueryCaches scope unpersists it on release). */
   private def handOffCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
@@ -135,69 +136,69 @@ object Curation {
       .unionByName(pairs.select(col("db").as("src"), col("da").as("dst")))
       .repartition(parts, col("dst"))
       .persist(MEMORY_AND_DISK)
-    // Each round's plan would otherwise NEST the previous round's plan —
-    // by round k Catalyst re-analyzes a depth-k tree and the fixed
-    // per-round cost grows without bound (the classic iterative-DataFrame
-    // lineage blow-up). The eager checkpoint materializes the round and
-    // TRUNCATES lineage, so every round is constant work (flavor selected
-    // by [[useReliableCheckpoint]]).
-    val reliable = useReliableCheckpoint(s)
-    def roundCheckpoint(df: DataFrame): DataFrame =
-      Curation.roundCheckpoint(df, reliable)
-    var labels = roundCheckpoint(
-      allDocs.select(col("doc_id"), col("doc_id").as("comp"))
-        .repartition(parts, col("doc_id")))
-    // labels only ever decrease, so Σcomp strictly decreases until the
-    // fixpoint — a single map-side-combinable agg per round is the whole
-    // convergence protocol (exact DECIMAL so no precision-induced early stop)
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      // sum over zero rows is NULL — an empty node set is already converged
-      val d = df.agg(sum(col("comp").cast(DecimalType(38, 0)))).first().getDecimal(0)
-      if (d == null) java.math.BigDecimal.ZERO else d
-    }
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var done = false
-    while (!done && iter < MaxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("comp").as("dcomp")), "dst")
-        .groupBy(col("src")).agg(min(col("dcomp")).as("nbr_comp"))
-        .withColumnRenamed("src", "doc_id")
-      val next = roundCheckpoint(labels // eager: materializes the round, truncates lineage
-        .join(nbrMin, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-        .repartition(parts, col("doc_id")))
-      val sumNow = labelSum(next)
-      freeCheckpoint(labels)
-      labels = next
-      done = sumNow.compareTo(prevSum) == 0
-      prevSum = sumNow
-      iter += 1
-    }
-    if (!done) {
-      // Propagation budget exhausted — component diameter exceeds the
-      // per-hop budget (rounds ∝ diameter: measured ~2× over linear at
-      // 100× on long-radius dup graphs, and unbounded for adversarial
-      // chains). Hand off to star contraction, whose round count is
-      // O(log n) REGARDLESS of diameter. The seed is the original edge
-      // set UNION the partial labels (each (doc_id, comp) is a valid
-      // same-component edge — comp is reachable from doc_id), so the
-      // hops already paid keep compressing the graph.
-      val seed = edges.select(col("src").as("u"), col("dst").as("v"))
-        .unionByName(labels.filter(col("comp") =!= col("doc_id"))
-          .select(col("doc_id").as("u"), col("comp").as("v")))
-      val out = starContractionComponents(allDocs, seed)
-      // star contraction checkpoints eagerly round-by-round, so by the
-      // time it returns nothing references the propagation state
-      edges.unpersist(false)
-      freeCheckpoint(labels)
-      out
-    } else {
-      edges.unpersist(false)
-      handOffCheckpoint(labels)
-      labels
-    }
+    try {
+      // Each round's plan would otherwise NEST the previous round's plan —
+      // by round k Catalyst re-analyzes a depth-k tree and the fixed
+      // per-round cost grows without bound (the classic iterative-DataFrame
+      // lineage blow-up). The eager checkpoint materializes the round and
+      // TRUNCATES lineage, so every round is constant work (flavor selected
+      // by [[useReliableCheckpoint]]).
+      val reliable = useReliableCheckpoint(s)
+      def roundCheckpoint(df: DataFrame): DataFrame =
+        Curation.roundCheckpoint(df, reliable)
+      var labels = roundCheckpoint(
+        allDocs.select(col("doc_id"), col("doc_id").as("comp"))
+          .repartition(parts, col("doc_id")))
+      // labels only ever decrease, so Σcomp strictly decreases until the
+      // fixpoint — a single map-side-combinable agg per round is the whole
+      // convergence protocol (exact DECIMAL so no precision-induced early stop)
+      def labelSum(df: DataFrame): java.math.BigDecimal = {
+        // sum over zero rows is NULL — an empty node set is already converged
+        val d = df.agg(sum(col("comp").cast(DecimalType(38, 0)))).first().getDecimal(0)
+        if (d == null) java.math.BigDecimal.ZERO else d
+      }
+      var prevSum = labelSum(labels)
+      var iter = 0
+      var done = false
+      while (!done && iter < MaxIters) {
+        val nbrMin = edges
+          .join(labels.select(col("doc_id").as("dst"), col("comp").as("dcomp")), "dst")
+          .groupBy(col("src")).agg(min(col("dcomp")).as("nbr_comp"))
+          .withColumnRenamed("src", "doc_id")
+        val next = roundCheckpoint(labels // eager: materializes the round, truncates lineage
+          .join(nbrMin, Seq("doc_id"), "left_outer")
+          .select(col("doc_id"),
+            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
+          .repartition(parts, col("doc_id")))
+        val sumNow = labelSum(next)
+        freeCheckpoint(labels)
+        labels = next
+        done = sumNow.compareTo(prevSum) == 0
+        prevSum = sumNow
+        iter += 1
+      }
+      if (!done) {
+        // Propagation budget exhausted — component diameter exceeds the
+        // per-hop budget (rounds ∝ diameter: measured ~2× over linear at
+        // 100× on long-radius dup graphs, and unbounded for adversarial
+        // chains). Hand off to star contraction, whose round count is
+        // O(log n) REGARDLESS of diameter. The seed is the original edge
+        // set UNION the partial labels (each (doc_id, comp) is a valid
+        // same-component edge — comp is reachable from doc_id), so the
+        // hops already paid keep compressing the graph.
+        val seed = edges.select(col("src").as("u"), col("dst").as("v"))
+          .unionByName(labels.filter(col("comp") =!= col("doc_id"))
+            .select(col("doc_id").as("u"), col("comp").as("v")))
+        val out = starContractionComponents(allDocs, seed)
+        // star contraction checkpoints eagerly round-by-round, so by the
+        // time it returns nothing references the propagation state
+        freeCheckpoint(labels)
+        out
+      } else {
+        handOffCheckpoint(labels)
+        labels
+      }
+    } finally edges.unpersist(false)
   }
 
   /**
@@ -338,8 +339,7 @@ object Curation {
         .select(col("sid"), col("m"), coalesce(col("cmass"), lit(0L)).as("cmass"))
         .filter(col("m") >= 2L || col("cmass") > 0L)
         .withColumn("deg", col("m") - 1 + col("cmass"))
-        .persist(MEMORY_AND_DISK)
-      graft.core.QueryCaches.report(a)
+        .transform(cached)
       a
     }
 
@@ -401,8 +401,7 @@ object Curation {
     val docComp = load(s, dir, "documents").select(col("doc_id"))
       .join(grouped, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(docComp)
+      .transform(cached)
     val sz = docComp.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
     docComp.join(sz, "comp")
       .select(col("doc_id"), col("comp").as("comp_id"), col("cluster_size"),
@@ -801,8 +800,7 @@ object Curation {
       .select(least(array_min(col("ma")), array_min(col("mb"))).as("a"),
         greatest(array_min(col("ma")), array_min(col("mb"))).as("b"))
       .distinct()
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(edges)
+      .transform(cached)
     // Driver fast path ([[DriverCollect]]): the orientation, wedge
     // generation and closing-edge probe are pure integer logic over the
     // collapsed set graph — below the cap they run on the driver (apex cap
@@ -861,8 +859,7 @@ object Curation {
     val deg = edges.select(col("a").as("u"))
       .unionByName(edges.select(col("b").as("u")))
       .groupBy(col("u")).agg(count(lit(1)).as("deg"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(deg)
+      .transform(cached)
     // orient a→b toward the higher (deg, id); a<b by construction, so a
     // degree tie keeps the id order
     val oriented = edges
@@ -872,13 +869,11 @@ object Curation {
         struct(col("a").as("s"), col("b").as("d"), col("db").as("dd")))
         .otherwise(struct(col("b").as("s"), col("a").as("d"), col("da").as("dd"))).as("o"))
       .select(col("o.s").as("src"), col("o.d").as("dst"), col("o.dd").as("dd"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(oriented)
+      .transform(cached)
     // the enumeration budget: apexes above the out-degree cap are
     // excluded from wedge generation and reported, never enumerated
     val outDeg = oriented.groupBy(col("src")).agg(count(lit(1)).as("od"))
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(outDeg)
+      .transform(cached)
     val okApex = outDeg.filter(col("od") <= TriApexOutCap).select(col("src"))
     val o1 = oriented.join(okApex, Seq("src"))
       .select(col("src"), col("dst").as("v"), col("dd").as("dv"))
@@ -944,8 +939,7 @@ object Curation {
     val e = pairs.select(col("da"), col("db"))
       .join(srcs.select(col("doc_id").as("da"), col("source").as("sa")), "da")
       .join(srcs.select(col("doc_id").as("db"), col("source").as("sb")), "db")
-      .persist(MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(e)
+      .transform(cached)
     val dtot = e.select(col("sa").as("source"))
       .unionByName(e.select(col("sb").as("source")))
       .groupBy(col("source")).agg(count(lit(1)).as("d_tot"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Near-duplicate detection operators (builder brief §dedup): exact word-set
@@ -126,12 +127,11 @@ object Dedup {
     * of the returned DataFrames — it feeds the cardinality probe, both
     * pair-join sides, and the member expansion, and there is no point
     * before the caller's final action at which it could be released here.
-    * The persist is reported through `onCache`
-    * ([[graft.core.QueryCaches]]): the public query entries auto-release
-    * it after their first action; long-lived callers thread a CacheScope. */
+    * It belongs to the active [[graft.core.QueryCaches]] scope: the public
+    * query entries release it after their first action, long-lived
+    * callers when they release their own scope. */
   private[queries] def jaccardSetGraph(docSets: DataFrame,
-      probeDense: Boolean = true,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): (DataFrame, DataFrame) = {
+      probeDense: Boolean = true): (DataFrame, DataFrame) = {
     // empty word sets are OUT of the pair universe: Jaccard over two empty
     // sets is 0/0, and the oracle's inverted-index join can never pair
     // them — treating them as mutual duplicates was both a divide-by-zero
@@ -145,15 +145,14 @@ object Dedup {
         dw.select(explode(col("words")).as("w")).distinct()
           .limit(WideVocabBits + 1).collect().map(_.getString(0))
       else Array.empty[String]
-    if (probeDense && probe.length <= DenseVocabBits) densePairs(dw, probe, onCache)
-    else if (probeDense && probe.length <= WideVocabBits) widePairs(dw, probe, onCache)
-    else ppjoinPairs(dw, onCache)
+    if (probeDense && probe.length <= DenseVocabBits) densePairs(dw, probe)
+    else if (probeDense && probe.length <= WideVocabBits) widePairs(dw, probe)
+    else ppjoinPairs(dw)
   }
 
-  private[queries] def jaccardPairs(docSets: DataFrame, probeDense: Boolean = true,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame = {
+  private[queries] def jaccardPairs(docSets: DataFrame, probeDense: Boolean = true): DataFrame = {
     // groups carries (lang, members, nw [, mask|words...]) per unique set
-    val (setPairs, groups) = jaccardSetGraph(docSets, probeDense, onCache)
+    val (setPairs, groups) = jaccardSetGraph(docSets, probeDense)
 
     // expand qualifying set pairs to all member doc pairs (distinct sets
     // never share a doc, so no duplicates can arise)
@@ -190,8 +189,7 @@ object Dedup {
     * would otherwise coalesce the byte-tiny input to one partition and
     * serialize the O(n²) comparisons. Falls back to the PPJoin path if the
     * collapsed universe exceeds the cap. */
-  private def densePairs(dw: DataFrame, vocab: Array[String],
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): (DataFrame, DataFrame) = {
+  private def densePairs(dw: DataFrame, vocab: Array[String]): (DataFrame, DataFrame) = {
     val bitValue = typedLit(vocab.sorted.zipWithIndex.map { case (t, i) => t -> (1L << i) }.toMap)
     val maskExpr = aggregate(transform(col("words"), w => element_at(bitValue, w)),
       lit(0L), (acc, x) => acc.bitwiseOR(x))
@@ -204,9 +202,8 @@ object Dedup {
       .groupBy(col("lang"), maskExpr.as("mask"))
       .agg(sort_array(collect_list(col("doc_id"))).as("members"))
       .withColumn("nw", bit_count(col("mask")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (g.count() > DenseSetsCap) { g.unpersist(); return ppjoinPairs(dw, onCache) }
-    onCache(g)
+      .transform(cached)
+    if (g.count() > DenseSetsCap) { g.unpersist(); return ppjoinPairs(dw) }
 
     val parts = dw.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
       .map(_.toInt).getOrElse(32)
@@ -255,8 +252,7 @@ object Dedup {
     * loop over ≤64 longs — no higher-order-function fallback in the hot
     * path. Falls back to PPJoin when the collapsed universe exceeds
     * [[DenseSetsCap]] (same contract as the 64-bit path). */
-  private def widePairs(dw: DataFrame, vocab: Array[String],
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): (DataFrame, DataFrame) = {
+  private def widePairs(dw: DataFrame, vocab: Array[String]): (DataFrame, DataFrame) = {
     val sorted = vocab.sorted
     val nSlots = (sorted.length + 63) / 64
     val slotMap = typedLit(sorted.zipWithIndex.map { case (t, i) => t -> i / 64 }.toMap)
@@ -279,9 +275,8 @@ object Dedup {
       // total-order key for unordered-pair dedup; masks are distinct within
       // (lang, mask) groups by construction, so the md5 is injective here
       .withColumn("sid", md5(concat_ws(",", transform(col("mask"), _.cast("string")))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (g.count() > DenseSetsCap) { g.unpersist(); return ppjoinPairs(dw, onCache) }
-    onCache(g)
+      .transform(cached)
+    if (g.count() > DenseSetsCap) { g.unpersist(); return ppjoinPairs(dw) }
 
     val parts = dw.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
       .map(_.toInt).getOrElse(32)
@@ -315,8 +310,7 @@ object Dedup {
   }
 
   /** General-vocabulary path: PPJoin prefix index + sorted-merge verify. */
-  private def ppjoinPairs(dw: DataFrame,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): (DataFrame, DataFrame) = {
+  private def ppjoinPairs(dw: DataFrame): (DataFrame, DataFrame) = {
     // unique (lang, word-set) groups; members sorted so intra-group pair
     // generation emits da < db without an extra comparison.
     // persisted: four consumers (token explode, prefix build, both verify
@@ -328,8 +322,7 @@ object Dedup {
       .agg(sort_array(collect_list(col("doc_id"))).as("members"))
       .withColumn("sid", md5(concat_ws("\u0001", col("lang"), concat_ws(" ", col("words")))))
       .withColumn("nw", size(col("words")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onCache(sets)
+      .transform(cached)
     val ex = sets.select(col("sid"), col("lang"), col("nw"), explode(col("words")).as("w"))
     // global token rarity over unique sets; plain shuffle join (never broadcast)
     val dfreq = ex.groupBy(col("w")).agg(count(lit(1)).as("df"))
@@ -567,8 +560,7 @@ object Dedup {
     // measured: 8 parquet scans / 6 shingle_set evaluations in the
     // dedup_minhash_lsh_md5 plan). One row per doc, query-owned release.
     val sigs = bandSignatures(spreadDocs(s, dir), hash32, bandKey)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(sigs)
+      .transform(cached)
     val base = sigs.select(col("doc_id"), col("shingles"))
     // Candidate generation stays NARROW: (band, key, doc_id, mh[32]) flows
     // through the join — shingle arrays re-attach by doc_id only for
@@ -803,8 +795,7 @@ object Dedup {
         col("band") === col("band_r") && col("key") === col("key_r") && col("da") < col("db"))
       .select(col("da"), col("db"), (mhAgree >= lit(minhashAgreeMin)).as("agrees"))
       .dropDuplicates("da", "db")
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val verdict = verifyPairs(base, cand.select(col("da"), col("db")), "da", "db", sort = false)
       .select(col("da"), col("db"), lit(1L).as("ok"))
     val staged = cand.select(lit("1_bucket").as("stage"), col("da"), col("db"))
@@ -844,8 +835,7 @@ object Dedup {
       .select(col("doc_id"), col("source"),
         when(length(Governance.normText(col("text"))) > 0,
           md5(Governance.normText(col("text")))).as("nk"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val canon = keyed.filter(col("nk").isNotNull)
       .groupBy(col("nk")).agg(min(col("doc_id")).as("canon_id"))
     val staged = keyed.join(canon, Seq("nk"), "left")
@@ -909,8 +899,7 @@ object Dedup {
     val sh = spreadDocs(s, dir)
       .select(col("doc_id"), GraftFunctions.shingle_set(col("text"), 3).as("shs"))
       .filter(size(col("shs")) > 0)
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val e = sh.select(col("doc_id"), size(col("shs")).cast("long").as("n"),
       explode(col("shs")).as("w"))
     val dfc = e.groupBy(col("w")).agg(count(lit(1)).as("dfc"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Window / event-stream operator inventory (SURVEY §2.2 window rows) on the
@@ -297,8 +298,7 @@ object Events {
       .agg(min(struct(col("ts"), col("event_id"))).as("fp"))
     val kept = e.join(fp, Seq("user_id"), "left")
       .filter(col("fp").isNull || struct(col("ts"), col("event_id")) <= col("fp"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val steps = kept
       .withColumn("f",
@@ -512,8 +512,7 @@ object Events {
           .as("recency_days"),
         count(lit(1)).as("frequency"),
         coalesce(dsum(col("value")), lit(0.0)).as("monetary"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val r = Quantiles.withNtile(perUser, RfmBuckets,
       Seq(col("recency_days").desc, col("user_id")), "r_score")
     val f = Quantiles.withNtile(r, RfmBuckets,
@@ -751,8 +750,7 @@ object Events {
     val ud = ev(s, dir)
       .select(col("user_id"), to_date(timestamp_micros(epochUs())).as("day"))
       .distinct()
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = ud
       .select(col("user_id"),
@@ -992,8 +990,7 @@ object Events {
           .cast("long").as("dn"))
       .groupBy(col("event_type"), col("dn"))
       .agg(count(lit(1)).as("x"))
-      .persist()
-    graft.core.QueryCaches.report(daily)
+      .transform(cached)
     val types = daily.select(col("event_type")).distinct()
       .orderBy(col("event_type")).collect().map(_.getString(0)).toSeq
     val spine = daily.agg(min(col("dn")).as("lo"), max(col("dn")).as("hi"))
@@ -1501,8 +1498,7 @@ object Events {
     val ud = ev(s, dir)
       .select(col("user_id"), expr(s"($epochUsExpr) DIV 86400000000").as("day"))
       .distinct()
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("n_dau"))
     val trailing = ud
       .select(col("user_id"), explode(sequence(col("day"), col("day") + 6L)).as("day"))
@@ -1610,8 +1606,7 @@ object Events {
         (datediff(to_date(date_trunc("week", timestamp_micros(epochUs()))),
           lit(java.sql.Date.valueOf("1970-01-05"))) / 7).cast("long").as("wk"))
       .distinct()
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val w = Window.partitionBy(col("user_id")).orderBy(col("wk"))
     val statuses = uw
       .withColumn("prev", lag(col("wk"), 1).over(w))

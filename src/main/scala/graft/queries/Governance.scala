@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import Tables._
 import graft.functions.GraftFunctions
+import graft.core.QueryCaches.cached
 
 /**
  * Corpus-governance operators (builder brief §dedup/§text-analysis, beyond
@@ -80,8 +81,7 @@ object Governance {
       .select(col("doc_id"),
         when(length(normText(col("text"))) > 0, md5(normText(col("text"))))
           .as("norm_fp"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val clusters = d.filter(col("norm_fp").isNotNull)
       .groupBy(col("norm_fp"))
       .agg(min(col("doc_id")).as("canon_id"), count(lit(1)).as("cluster_n"))
@@ -156,8 +156,7 @@ object Governance {
       .select(col("doc_id"), col("nt"),
         md5(substring(col("nt"), 1, EditBlockChars)).as("blk"),
         length(col("nt")).as("len"), hist.as("hist"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     // block populations (metadata-sized: one row per distinct prefix):
     // blocks over [[EditBlockCap]] skip the quadratic verify entirely
     // and surface as audit rows — without the cap, a hot boilerplate
@@ -187,8 +186,7 @@ object Governance {
       .select(col("doc_a"), col("doc_b"), col("blk_n"))
       .join(d.select(col("doc_id").as("doc_a"), col("nt").as("nt_a")), Seq("doc_a"))
       .join(d.select(col("doc_id").as("doc_b"), col("nt").as("nt_b")), Seq("doc_b"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     // THRESHOLDED Levenshtein (3-arg form): banded DP, O((m+n)·τ) per
     // pair instead of O(m·n) — returns −1 past the bound, which is
     // exactly the acceptance threshold, so surviving pairs and their
@@ -274,8 +272,7 @@ object Governance {
           .as("nk"),
         Text.bowFp(s, col("text")).as("bk"))
       // three consumers (two method collapses + the probe) — one scan
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val nc = d.filter(col("nk").isNotNull).groupBy(col("nk"))
       .agg(min(col("doc_id")).as("n_canon"))
     val bc = d.filter(col("bk").isNotNull).groupBy(col("bk"))
@@ -821,8 +818,7 @@ object Governance {
     val sw = docs(s, dir)
       .select(col("source"), explode(Text.words(col("text"))).as("word"))
       .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cs"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val ns = sw.groupBy(col("source"))
       .agg(sum(col("cs")).as("n_tokens"), count(lit(1)).as("n_vocab"))
     val ps = col("cs").cast("double") / col("n_tokens").cast("double")
@@ -917,8 +913,7 @@ object Governance {
         explode(graft.functions.GraftFunctions
           .shingle_set(col("text"), Corpus.DecontamShingle)).as("sh"))
       .distinct()
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val firstSrc = sh.groupBy(col("sh")).agg(min(col("source")).as("first_src"))
     sh.join(firstSrc, Seq("sh"))
       .groupBy(col("source"))
@@ -1396,8 +1391,7 @@ object Governance {
     val tf = docs(s, dir)
       .select(explode(Text.words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val nVocab = tf.count()
     val k = math.min(100L, nVocab - 1L)
     val empty = s.createDataFrame(
@@ -1457,8 +1451,7 @@ object Governance {
       .filter(col("n_chars").isNotNull)
       .select(col("source"), col("n_chars").cast("long").as("v"))
       .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val ns = sv.groupBy(col("source")).agg(sum(col("c")).as("n"))
     // dense (value × source) grid: every source's count at EVERY observed
     // value (0 where absent), so one window per source yields the
@@ -1521,8 +1514,7 @@ object Governance {
       .filter(col("n_chars").isNotNull && col("text").isNotNull)
       .select(col("source"), col("n_chars").cast("long").as("x"),
         size(Text.words(col("text"))).cast("long").as("y"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     def ranks(vc: String, out: String): DataFrame = {
       val w = Window.partitionBy(col("source")).orderBy(col(vc))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -1585,8 +1577,7 @@ object Governance {
         size(Text.words(col("text"))).cast("long").as("y"))
       .groupBy(col("source"), col("x"), col("y"))
       .agg(count(lit(1)).cast(d38).as("c"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     // doubled pair counts (no /2 anywhere): D0 = n(n−1), D1/D2 = Σ t(t−1)
     // over the x/y marginals — τ-b's (n0−n1)(n0−n2) = (D0−D1)(D0−D2)/4
     val n = g.groupBy(col("source")).agg(sum(col("c")).as("n"))
@@ -1738,8 +1729,7 @@ object Governance {
     val base = docs(s, dir)
       .filter(col("n_chars").isNotNull)
       .select(col("source"), col("n_chars").cast("long").as("x"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val gv = base.groupBy(col("source"), col("x")).agg(count(lit(1)).as("c"))
       .withColumn("cum", sum(col("c")).over(
         Window.partitionBy(col("source")).orderBy(col("x"))
@@ -1865,8 +1855,7 @@ object Governance {
       .filter(col("n_chars").isNotNull)
       .select(col("source"), col("n_chars").cast("long").as("v"))
       .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     // pooled per-value doubled average rank over the distinct-value domain
     val wv = Window.partitionBy(Tables.zeroPart(col("v"))).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1924,8 +1913,7 @@ object Governance {
       .filter(col("n_chars").isNotNull)
       .select(col("source"), col("n_chars").cast("long").as("v"))
       .groupBy(col("source"), col("v")).agg(count(lit(1)).as("c"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val vc = sv.groupBy(col("v")).agg(sum(col("c")).as("cv"))
     // N and the tie sum Σ(cv³−cv): exact 1-row model scalars
     val tot = vc.agg(sum(col("cv")).as("n"),

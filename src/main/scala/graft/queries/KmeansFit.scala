@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Full-Lloyd k-means over the embeddings table — the looped composition of
@@ -153,26 +154,23 @@ object KmeansFit {
    * recomputes only the LAST round from the persisted member relation.
    */
   def fit(s: SparkSession, e0: DataFrame, rounds: Int,
-      target: Long = Similarity.FineCellTarget,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame =
-    mStep(lloydChain(s, e0, rounds, target, onCache).last)
+      target: Long = Similarity.FineCellTarget): DataFrame =
+    mStep(lloydChain(s, e0, rounds, target).last)
       .orderBy(col("cid"), col("dim"))
 
   /** The per-round assignment plans of a `rounds`-round Lloyd run: element
     * r−1 is round r's E-step (vec_id, v, cid, rd2) against the round-(r−1)
     * centroid set. Intermediate centroid sets materialize eagerly
     * (driver literals at C ≤ 8, persisted model-sized relations above —
-    * every persist reports into `onCache`); each returned plan recomputes
-    * only ITS round's assignment from the persisted member relation. */
+    * all owned by the active [[graft.core.QueryCaches]] scope); each
+    * returned plan recomputes only ITS round's assignment from the
+    * persisted member relation. */
   private[graft] def lloydChain(s: SparkSession, e0: DataFrame, rounds: Int,
-      target: Long = Similarity.FineCellTarget,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): Seq[DataFrame] = {
+      target: Long = Similarity.FineCellTarget): Seq[DataFrame] = {
     graft.functions.GraftFunctions.register(s)
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = e0.filter(col("embedding").isNotNull)
-    val members = memberRel(e)
-    members.persist()
-    onCache(members)
+    val members = cached(memberRel(e))
     val nMembers = members.count()
     val c0 = math.max(8L, (nMembers + target - 1L) / target)
     if (c0 <= 8L) {
@@ -194,15 +192,12 @@ object KmeansFit {
       var cents: DataFrame = e.filter(col("vec_id") < c0)
         .select(col("vec_id").as("cid"), Similarity.dArr(col("embedding")).as("cv"))
         .withColumn("cc", dot(col("cv"), col("cv")))
-      cents.persist()
-      onCache(cents)
+        .transform(cached)
       var cCount = cents.count()
       (1 to rounds).map { r =>
         val asg = assignRel(members, cents, cCount)
         if (r < rounds) {
-          val next = centRelOf(mStep(asg))
-          next.persist()
-          onCache(next)
+          val next = cached(centRelOf(mStep(asg)))
           cCount = next.count()
           cents = next
         }
@@ -233,14 +228,10 @@ object KmeansFit {
   /** E-step of a FROZEN model: assign every member of `e0` to its nearest
     * centroid from a trained (cid, dim, n, c_new) table — the reload half
     * of the worker round-trip. Output (vec_id, cid, rd2). */
-  def assignCentroids(s: SparkSession, e0: DataFrame,
-      centDims: DataFrame,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame = {
+  def assignCentroids(s: SparkSession, e0: DataFrame, centDims: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val members = memberRel(e0.filter(col("embedding").isNotNull))
-    val cents = centRelOf(centDims.select(col("cid"), col("dim"), col("c_new")))
-    cents.persist()
-    onCache(cents)
+    val cents = cached(centRelOf(centDims.select(col("cid"), col("dim"), col("c_new"))))
     val cCount = cents.count()
     val asg =
       if (cCount <= 8L) {

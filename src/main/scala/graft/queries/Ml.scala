@@ -5,6 +5,7 @@ import graft.plans.MlCompiler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * ML-model template-compiler queries (SURVEY §2.5; VERDICT r02 missing #1):
@@ -145,8 +146,7 @@ object Ml {
       .select(col("unique_id"), col("user_pseudo_id"), col("user_id"), col("label"),
         ((col("unique_id").cast("long") * 2654435761L % 1000003L) / lit(1000003.0))
           .as("probability"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
 
   /** `prepared_predictions` (`output.sql:37-54`): scores band-joined onto
     * the conversion-value segments. The segment relation is ≤
@@ -253,8 +253,7 @@ object Ml {
     val evs = Ga4.ga4EventsPartitioned(s, dir)
       .filter(col("_table_suffix").between("20240105", "20240125")) // pruned scan
       .select(col("event_name").as("name"), col("event_params").as("params"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val top = evs.groupBy(col("name")).agg(count(lit(1)).as("count"))
       .orderBy(col("count").desc).limit(100)
     val v = col("p.value")

@@ -4,6 +4,7 @@ import graft.operators.BinaryBatch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Multimodal-column operators (builder brief §multimodal). The documents
@@ -116,8 +117,7 @@ object Multimodal {
     }.reduce(_ + _)
     val sigs = chars.groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
       .select(col("doc_id"), sig.as("sig"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val bands = sigs.select(col("doc_id"), col("sig"),
         explode(array((0 until PhashBands).map(j =>
           struct(lit(j).as("j"),

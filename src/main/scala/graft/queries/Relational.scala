@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Relational operator inventory (SURVEY §2.2) on the TPC-H-ish tables:
@@ -219,8 +220,7 @@ object Relational {
         col("p_partkey") === col("l_partkey"))
       .select(col("l_orderkey"), col("p_brand"))
       .distinct()
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val nOrders = ob.select(col("l_orderkey")).distinct().count()
     val marg = ob.groupBy(col("p_brand")).agg(count(lit(1)).as("n_m"))
     val a = ob.select(col("l_orderkey"), col("p_brand").as("brand_a"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Similarity search over the embeddings table (builder brief §similarity):
@@ -589,8 +590,7 @@ object Similarity {
       .filter(col("vec_id") >= 8 && col("embedding").isNotNull)
       .select(col("vec_id"), dArr(col("embedding")).as("v"))
       .withColumn("vv", dot(col("v"), col("v")))
-      .persist()
-    graft.core.QueryCaches.report(m)
+      .transform(cached)
     val seed = m.orderBy(col("vec_id")).limit(1)
       .select(col("vec_id"), col("v")).collect().headOption
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Option[Double])]
@@ -982,8 +982,7 @@ object Similarity {
     val m = asg
       .select(col("vec_id"), col("v"), col("cid"),
         sqrt(dot(col("v"), col("v"))).as("nrm"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val a = m.select(col("cid"), col("vec_id").as("va"), col("v").as("xa"),
       col("nrm").as("na"))
     val b = m.select(col("cid"), col("vec_id").as("vb"),
@@ -1188,8 +1187,7 @@ object Similarity {
       .join(labels, Seq("vec_id"))
       .select(col("vec_id"), col("v"), col("cid"), col("label"),
         sqrt(dot(col("v"), col("v"))).as("nrm"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val a = m.select(col("cid"), col("vec_id").as("anchor_id"),
       col("v").as("xa"), col("nrm").as("na"), col("label"))
     val b = m.select(col("cid"), col("vec_id").as("vb"),
@@ -1544,8 +1542,7 @@ object Similarity {
       // scan + cast + center pass is the per-round constant cost;
       // released by the query owner)
       val cent = emb.select(xc.as("xc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.core.QueryCaches.report(cent)
+        .transform(cached)
       val dec8 = org.apache.spark.sql.types.DataTypes.createDecimalType(30, 8)
       for (_ <- 1 to PcaIters if norms.forall(_ > 0)) {
         val sc = round(dot(col("xc"), typedLit(v)), 6)
@@ -1647,8 +1644,7 @@ object Similarity {
     * ~16 s with the barrier. */
   def embedPcaDebiasRows(s: SparkSession, dir: String): DataFrame = {
     val perVec = embedPcaDebias(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(perVec)
+      .transform(cached)
     perVec
       .select(col("vec_id"), col("coef"), col("n2_orig"), col("n2_resid"),
         posexplode(col("resid")).as(Seq("dim", "resid")))
@@ -1751,8 +1747,7 @@ object Similarity {
       .select(col("cid"), explode(Text.words(col("text"))).as("term"))
     val cellTerm = toks.groupBy(col("cid"), col("term"))
       .agg(count(lit(1)).as("cnt"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val cellTot = cellTerm.groupBy(col("cid")).agg(sum(col("cnt")).as("n_cell"))
     val corpTerm = cellTerm.groupBy(col("term")).agg(sum(col("cnt")).as("cnt_corpus"))
     val nTotal = cellTot.agg(coalesce(sum(col("n_cell")), lit(0L))).first().getLong(0)
@@ -1822,8 +1817,7 @@ object Similarity {
       .withColumn("qid", explode(typedLit(anchors.map(_._1))))
       .select(col("qid"), col("vec_id"),
         round(simF, 6).as("sim_full"), round(simT, 6).as("sim_trunc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val wF = Window.partitionBy(col("qid"))
       .orderBy(col("sim_full").desc, col("vec_id"))
     val wT = Window.partitionBy(col("qid"))
@@ -1912,8 +1906,7 @@ object Similarity {
       .withColumn("qid", explode(typedLit(anchors.map(_._1))))
       .select(col("qid"), col("vec_id"),
         round(simF, 6).as("sim_full"), hamm.cast("long").as("ham"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val wF = Window.partitionBy(col("qid"))
       .orderBy(col("sim_full").desc, col("vec_id"))
     val wH = Window.partitionBy(col("qid"))

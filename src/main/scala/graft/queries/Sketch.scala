@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Cardinality / resemblance SKETCH operators with bit-exact cross-engine
@@ -210,8 +211,7 @@ object Sketch {
    */
   def sketchHllMerge(s: SparkSession, dir: String): DataFrame = {
     val w = sourceWords(s, dir)
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val rem = col("h48") % lit(4398046511104L)
     val rho = when(rem === 0L, lit(43))
       .otherwise(lit(43) - length(conv(rem, 10, 2)))
@@ -377,8 +377,7 @@ object Sketch {
     val tc = docs(s, dir)
       .select(explode(Text.words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     def slice(j: Int): Column =
       conv(substring(md5(col("word")), 1 + 8 * j, 8), 16, 10).cast("long") %
         CmsWidth
@@ -458,8 +457,7 @@ object Sketch {
       conv(substring(md5(col("word")), 1 + 8 * j, 8), 16, 10).cast("long") %
         BloomM
     val sw = sourceWords(s, dir).select(col("source"), col("word"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val wordBits = (0 until BloomK).map(j =>
         sw.select(col("source"), col("word"), slice(j).as("bit")))
       .reduce(_ unionByName _)
@@ -580,16 +578,14 @@ object Sketch {
    */
   def sketchHllIntersect(s: SparkSession, dir: String): DataFrame = {
     val w = sourceWords(s, dir)
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val rem = col("h48") % lit(4398046511104L)
     val rho = when(rem === 0L, lit(43))
       .otherwise(lit(43) - length(conv(rem, 10, 2)))
     val regs = w.select(col("source"),
         (col("h48") / lit(4398046511104L)).cast("long").as("bucket"), rho.as("rho"))
       .groupBy(col("source"), col("bucket")).agg(max(col("rho")).as("m_j"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     def sTotalCol: Column =
       sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(43 - m_j AS INT))")) +
         (lit(HllM.toLong) - count(lit(1))) * lit(8796093022208L)
@@ -707,15 +703,13 @@ object Sketch {
       .withColumn("cum", sum(col("c")).over(
         Window.partitionBy(col("source")).orderBy(col("v"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val hb = d.groupBy(col("source"), expr(s"v DIV $QsWidth").as("bucket"))
       .agg(count(lit(1)).as("c"))
       .withColumn("cum", sum(col("c")).over(
         Window.partitionBy(col("source")).orderBy(col("bucket"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val n = gv.groupBy(col("source")).agg(sum(col("c")).as("n"))
     def target(q: Int): Column = expr(s"($q * n + 99) DIV 100")
     def exactQ(q: Int, out: String): DataFrame =

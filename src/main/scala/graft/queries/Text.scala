@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
 import graft.operators.BigramLm
+import graft.core.QueryCaches.cached
 
 /**
  * Text-analysis operators for the large-scale training-data pipeline
@@ -181,8 +182,7 @@ object Text {
       .withColumn("dfreq", count(lit(1)).over(wdf))
       .filter(col("dfreq") <= WinnowDfCap)
       .select(col("doc_id"), col("fp"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val nf = xf.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     val pairs = xf.select(col("fp"), col("doc_id").as("da"))
       .join(xf.select(col("fp").as("fp_b"), col("doc_id").as("db")),
@@ -333,8 +333,7 @@ object Text {
         val (find, repl) = bpeReplace(pa, pb)
         val next = dict.withColumn("repr",
             org.apache.spark.sql.functions.replace(col("repr"), lit(find), lit(repl)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.core.QueryCaches.report(next)
+          .transform(cached)
         next.count() // materialize before the caller drops this round's cache
         (pa, pb, t.getLong(2), new SparkBpeDict(next))
       }
@@ -361,8 +360,7 @@ object Text {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("freq"),
         regexp_replace(col("word"), "(.)", BpeSep + "$1" + BpeSep).as("repr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.QueryCaches.report(wc)
+      .transform(cached)
     var dict: BpeDict = graft.operators.DriverCollect.collectSmall(wc) match {
       case Some(rows) =>
         wc.unpersist(false)
@@ -989,8 +987,7 @@ object Text {
       .select(col("doc_id"), explode(words(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val corpus = tf.groupBy(col("token")).agg(sum(col("tf")).as("cnt"))
     val perDoc = tf.join(corpus, "token")
       .groupBy(col("doc_id"))
@@ -1351,8 +1348,7 @@ object Text {
     val w = docs(s, dir)
       .select(col("doc_id"), explode(words(col("text"))).as("word"))
     val wc = w.groupBy(col("word")).agg(count(lit(1)).as("c"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val topW = wc.orderBy(col("c").desc, col("word")).limit(SubwordTopWords)
       .select(col("word"))
     // merge table: pair statistics over the distinct vocabulary weighted
@@ -1527,8 +1523,7 @@ object Text {
       .select(col("doc_id"), lit(1L).as("is_keeper"))
     val f1 = f0.join(keepers, Seq("doc_id"), "left")
       .join(textLmNll(s, dir).select(col("doc_id"), col("nll")), Seq("doc_id"), "left")
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val d2n = f1
       .filter(col("p_rules") && col("is_keeper").isNotNull && col("nll").isNotNull)
       .select(col("doc_id"), col("nll"))
@@ -1541,8 +1536,7 @@ object Text {
         (col("p_rules") && col("is_keeper").isNotNull).as("p_dedup"),
         col("p_lm").isNotNull.as("p_lm"),
         (Curation.md5Mod100(col("doc_id")) < 50L).as("p_sample"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     def stage(name: String, cond: Column): DataFrame = f2
       .filter(cond)
       .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
@@ -1752,8 +1746,7 @@ object Text {
       docs(s, dir).filter(col("text").isNotNull)
         .select(words(col("text")).as("ws")))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val nRow = bi.agg(sum(col("c12"))).first()
     if (nRow.isNullAt(0)) return bi.select(col("w1"), col("w2"), col("c12"),
       col("c12").as("c1"), col("c12").as("c2"),
@@ -1882,16 +1875,14 @@ object Text {
       .withColumn("grp", sum(col("is_stop").cast("long")).over(gw))
       .filter(!col("is_stop"))
       .select(col("doc_id"), col("grp"), col("pos"), col("w"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val pl = nz.groupBy(col("doc_id"), col("grp"))
       .agg(count(lit(1)).as("len"),
         array_join(transform(
           array_sort(collect_list(struct(col("pos"), col("w")))),
           x => x.getField("w")), " ").as("phrase"))
       .filter(col("len") <= RakeMaxLen)
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val tk = nz.join(pl.select(col("doc_id"), col("grp"), col("len")),
       Seq("doc_id", "grp"))
     val wscore = tk.groupBy(col("w"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import Tables._
+import graft.core.QueryCaches.cached
 
 /**
  * Training-pipeline audit + sampling operators (builder brief §beyond-the-
@@ -520,8 +521,7 @@ object TrainAudit {
         when(md5Mod(col("doc_id"), 5) === 0L, "test").otherwise("train").as("grp"),
         expr(s"n_chars DIV $PsiBucket").as("bin"))
     val cb = base.groupBy(col("grp"), col("bin")).agg(count(lit(1)).as("c"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val totals = cb.groupBy(col("grp")).agg(sum(col("c")).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val nTrain = totals.getOrElse("train", 0L)
@@ -1026,8 +1026,7 @@ object TrainAudit {
       // descending-threshold order spelled as an ascending range sort on
       // the negated score (repartitionByRange needs a sortable key)
       .withColumn("nscore", -col("score"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val r1 = graft.operators.Quantiles.withRunningTotal(
       g, Seq(col("nscore")), "c", "cumc")
     val r2 = graft.operators.Quantiles.withRunningTotal(
@@ -1102,15 +1101,13 @@ object TrainAudit {
     val g = sc.groupBy(col("score"))
       .agg(count(lit(1)).as("c"), sum(col("pos")).as("p"))
       .withColumn("nscore", -col("score"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val r1 = graft.operators.Quantiles.withRunningTotal(
       g, Seq(col("nscore")), "c", "cumc")
     val r2 = graft.operators.Quantiles.withRunningTotal(
       r1.withColumn("cumc2", col("cumc")).drop("cumc"),
       Seq(col("nscore")), "p", "cump")
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val totRow = r2.agg(sum(col("c")), sum(col("p"))).first()
     if (totRow.isNullAt(0))
       return r2.select(col("score").as("threshold"), col("cump").as("tp"),
@@ -1418,8 +1415,7 @@ object TrainAudit {
       .groupBy(col("src_i"), col("src_j"))
       .agg(count(lit(1)).as("n_ij"),
         sum((col("m_i") > col("m_j")).cast("long")).as("w_ij"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val w1 = games.groupBy(col("src_i"))
       .agg(sum(col("w_ij")).as("n_wins"), sum(col("n_ij")).as("n_games"))
       .withColumn("w1", round(lit(2.0d) * col("n_wins").cast("double") /
@@ -1940,8 +1936,7 @@ object TrainAudit {
       .select((-k).as("nk"), (col("label") % 2 === 1).cast("long").as("pos"))
     val g = base.groupBy(col("nk"))
       .agg(count(lit(1)).as("c"), sum(col("pos")).as("p"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     // n / total positives: exact 1-row model scalars (the Dunn convention)
     val tot = g.agg(sum(col("c")), sum(col("p"))).first()
     val n = if (tot.isNullAt(0)) 0L else tot.getLong(0)
@@ -2047,8 +2042,7 @@ object TrainAudit {
         (col("lang") === "en").cast("long").as("y"))
     val gv = base.groupBy(col("x"))
       .agg(count(lit(1)).as("c"), sum(col("y")).as("p"))
-      .persist()
-      .transform { df => graft.core.QueryCaches.report(df); df }
+      .transform(cached)
     val tot = gv.agg(sum(col("c")), sum(col("p"))).first()
     val n = if (tot.isNullAt(0)) 0L else tot.getLong(0)
     val nPos = if (tot.isNullAt(1)) 0L else tot.getLong(1)

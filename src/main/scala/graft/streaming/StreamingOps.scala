@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.core.QueryCaches.cached
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -267,29 +268,6 @@ object StreamingOps {
   }
 
   /**
-   * Streaming incremental NEAR-dup check (dedup_incremental_md5
-   * unbounded): an arriving document stream `(doc_id, text, ingest_ts)`
-   * is probed against the STATIC corpus band index through a
-   * stream-static equi-join on `(band, key)` — the continuously-ingesting
-   * twin of the daily-batch probe, same md5 LSH family end-to-end
-   * ([[graft.queries.Dedup.md5BandSignatures]] is per-row codegen only,
-   * so the identical signature computation runs legally on the stream).
-   *
-   * Scale shape: the corpus index is the stored banded relation a
-   * production pipeline maintains between ingests (bucket-capped batch
-   * side) — both it and the shingle-set relation are PERSISTED here, so
-   * the band window and the signature computation run once and every
-   * micro-batch probes the materialized result rather than re-scanning
-   * the corpus (a stream-static join re-executes an unpersisted static
-   * plan per batch). The caller owns the cache lifetime through
-   * `onCache` (the [[graft.workers.MlModelJobs]] tracker pattern) and
-   * unpersists after stopping the stream. The stream side never shuffles
-   * until the candidate dedup, whose state is bounded by the watermark
-   * via `dropDuplicatesWithinWatermark`. Exact-Jaccard verification
-   * re-joins the static shingle sets by candidate doc id only — corpus
-   * text never streams.
-   */
-  /**
    * Streaming benchmark decontamination — the online leg of
    * [[graft.queries.Corpus.decontamOverlap]]: freshly crawled documents
    * are scored against a STATIC benchmark shingle set as they arrive, so
@@ -304,11 +282,12 @@ object StreamingOps {
    * set), and the stream side is a stream-static cross join against
    * that single row followed by a codegen'd sorted-intersect per
    * document: completely STATELESS — no watermark, no state store,
-   * append-mode safe, nothing accumulates. The static subtree is cached
-   * via `onCache` so micro-batches don't recompute the benchmark scan.
+   * append-mode safe, nothing accumulates. The static row is
+   * [[graft.core.QueryCaches.cached]] so micro-batches don't recompute
+   * the benchmark scan; the caller's active scope owns it until the
+   * caller releases it after stopping the stream.
    */
-  def decontaminationStream(newDocs: DataFrame, benchDocs: DataFrame,
-      onCache: DataFrame => Unit = _ => ()): DataFrame = {
+  def decontaminationStream(newDocs: DataFrame, benchDocs: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions
     import graft.queries.Corpus
     val bench = benchDocs
@@ -316,8 +295,7 @@ object StreamingOps {
         Corpus.DecontamShingle)).as("sh"))
       .distinct()
       .agg(sort_array(collect_set(col("sh"))).as("bench_sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onCache(bench)
+      .transform(cached)
     val sha = GraftFunctions.shingle_set(col("text"), Corpus.DecontamShingle)
     val nHit = GraftFunctions
       .sorted_intersect_size(col("sha"), col("bench_sh")).cast("long")
@@ -344,8 +322,8 @@ object StreamingOps {
    * inner joins make a no-op.
    *
    * Scale/state design: the model is the two static count tables
-   * (distinct-bigram-bounded, cached via `onCache`) and the vocabulary
-   * scalar; the stream side is a per-doc bigram explode into a
+   * (distinct-bigram-bounded, cached in the caller's scope) and the
+   * vocabulary scalar; the stream side is a per-doc bigram explode into a
    * stream-static LEFT join — the only state is the append-mode
    * per-document aggregate, sealed (emitted once, exactly once) when
    * the watermark passes the document's ingest timestamp. Per-bigram
@@ -354,20 +332,17 @@ object StreamingOps {
    * micro-batch partitioning.
    */
   def lmScoreStream(newDocs: DataFrame, corpusDocs: DataFrame,
-      lateness: String = "1 hour",
-      onCache: DataFrame => Unit = _ => ()): DataFrame = {
+      lateness: String = "1 hour"): DataFrame = {
     import graft.operators.BigramLm
-    val (pairs, lm) = BigramLm.fit(corpusDocs)
-    val cu = lm.cu.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onCache(pairs)
-    onCache(cu)
+    val (_, lm) = BigramLm.fit(corpusDocs)
+    cached(lm.cu) // every micro-batch's left join reads it
     val scored = newDocs
       .select(col("doc_id"), col("ingest_ts"),
         graft.queries.Text.words(col("text")).as("ws"))
       .withWatermark("ingest_ts", lateness)
     // occurrence-level (m = 1): a per-(doc, bigram) pre-aggregation would
     // be a second stateful aggregation on the stream
-    lm.copy(cu = cu).score(BigramLm.explode(scored).withColumn("m", lit(1L)))
+    lm.score(BigramLm.explode(scored).withColumn("m", lit(1L)))
       .groupBy(col("doc_id"), col("ingest_ts"))
       .agg(BigramLm.nBigrams, BigramLm.nll)
       .drop("ingest_ts")
@@ -385,15 +360,14 @@ object StreamingOps {
    * Scale/state design: the anchors are driver constants (model
    * parameters) so the stream-side bucket is a pure per-row expression;
    * the static side collapses to the benchmark slice only (bucket, id,
-   * vector — benchmark suites are tiny, cached via `onCache`); the
+   * vector — benchmark suites are tiny, cached in the caller's scope); the
    * stream-static INNER equi-join keeps no join state, and the only
    * state is the append-mode per-document aggregate sealed when the
    * watermark passes the document's ingest timestamp. Sims round at
    * 6 dp before MAX — the batch contract.
    */
   def semanticDecontamStream(newVecs: DataFrame, staticEmb: DataFrame,
-      staticDocs: DataFrame, lateness: String = "1 hour",
-      onCache: DataFrame => Unit = _ => ()): DataFrame = {
+      staticDocs: DataFrame, lateness: String = "1 hour"): DataFrame = {
     import graft.queries.Similarity
     val anchors = Similarity.anchorVecsOf(staticEmb)
     val m = staticEmb
@@ -409,8 +383,7 @@ object StreamingOps {
     val bench = m.filter(col("source") === bsLit)
       .select(col("bucket").as("bucket_b"), col("vec_id").as("bid"),
         col("v").as("bv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onCache(bench)
+      .transform(cached)
     newVecs
       .filter(col("embedding").isNotNull && Similarity.noModel(anchors))
       .select(col("doc_id"), col("ingest_ts"),
@@ -429,15 +402,32 @@ object StreamingOps {
         col("max_sim"), (col("n_bench_hits") > 0).as("contaminated"))
   }
 
+  /**
+   * Streaming incremental NEAR-dup check (dedup_incremental_md5
+   * unbounded): an arriving document stream `(doc_id, text, ingest_ts)`
+   * is probed against the STATIC corpus band index through a
+   * stream-static equi-join on `(band, key)` — the continuously-ingesting
+   * twin of the daily-batch probe, same md5 LSH family end-to-end
+   * ([[graft.queries.Dedup.md5BandSignatures]] is per-row codegen only,
+   * so the identical signature computation runs legally on the stream).
+   *
+   * Scale shape: the corpus index is the stored banded relation a
+   * production pipeline maintains between ingests (bucket-capped batch
+   * side) — both it and the shingle-set relation are PERSISTED here, so
+   * the band window and the signature computation run once and every
+   * micro-batch probes the materialized result rather than re-scanning
+   * the corpus (a stream-static join re-executes an unpersisted static
+   * plan per batch). Both are [[graft.core.QueryCaches.cached]], so they
+   * belong to the caller's active scope, which the caller releases after
+   * stopping the stream. The stream side never shuffles until the
+   * candidate dedup, whose state is bounded by the watermark via
+   * `dropDuplicatesWithinWatermark`. Exact-Jaccard verification
+   * re-joins the static shingle sets by candidate doc id only — corpus
+   * text never streams.
+   */
   def incrementalDedupStream(newDocs: DataFrame, corpusDocs: DataFrame,
-      lateness: String = "1 hour",
-      onCache: DataFrame => Unit = _ => ()): DataFrame = {
+      lateness: String = "1 hour"): DataFrame = {
     import graft.queries.Dedup
-    def cached(df: DataFrame): DataFrame = {
-      val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      onCache(c)
-      c
-    }
     // static side: banded + capped corpus index, and its shingle sets
     val corpusSigs = Dedup.md5BandSignatures(corpusDocs)
     val index = cached(Dedup.cappedBands(corpusSigs
@@ -525,16 +515,14 @@ object StreamingOps {
    * to ≤ K₁ cells); per-row work is Θ(√C + cell size) — the batch
    * assigner's per-member cost, row-at-a-time.
    */
-  def kmeansAssignStream(newVecs: DataFrame, centDims: DataFrame,
-      onCache: DataFrame => Unit = _ => ()): DataFrame = {
+  def kmeansAssignStream(newVecs: DataFrame, centDims: DataFrame): DataFrame = {
     import graft.queries.{KmeansFit, Similarity}
     graft.functions.GraftFunctions.register(newVecs.sparkSession)
     def dot(a: Column, b: Column): Column =
       graft.functions.GraftFunctions.dot_f64(a, b)
     val cents = KmeansFit.centRelOf(
       centDims.select(col("cid"), col("dim"), col("c_new")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onCache(cents)
+      .transform(cached)
     val cCount = cents.count()
     val k1 = if (cCount <= 8L) 1L
       else math.max(1L, math.ceil(math.sqrt(cCount.toDouble)).toLong)
@@ -556,8 +544,7 @@ object StreamingOps {
       .groupBy(col("g"))
       .agg(sort_array(collect_list(struct(col("cid"), col("cv"), col("cc"))))
         .as("cands"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    onCache(cellCents)
+      .transform(cached)
     val worst = struct(lit(Double.MaxValue).as("d"), lit(Long.MaxValue).as("cid"))
     newVecs
       .filter(col("embedding").isNotNull && Similarity.noModel(coarse))

@@ -30,13 +30,11 @@ object CorpusKmeans {
   def trainKmeans(e: DataFrame, modelUri: String, rounds: Int,
       target: Long = graft.queries.Similarity.FineCellTarget): Long = {
     val s = e.sparkSession
-    // own the build's persisted intermediates explicitly (the MlModelJobs
-    // CacheScope convention — no `owned` wrapper outside SparkEntry)
+    // the Lloyd loop's cached intermediates live until the model is written
     val scope = new graft.core.QueryCaches.CacheScope
-    try {
-      val cent = graft.queries.KmeansFit.fit(s, e, rounds, target,
-        onCache = scope.collect)
-      cent.write.mode("overwrite").parquet(s"$modelUri/cent")
+    try scope {
+      graft.queries.KmeansFit.fit(s, e, rounds, target)
+        .write.mode("overwrite").parquet(s"$modelUri/cent")
     } finally scope.release()
     val c = s.read.parquet(s"$modelUri/cent")
       .select(col("cid")).distinct().count()
@@ -47,12 +45,12 @@ object CorpusKmeans {
   }
 
   /** One E-step of a persisted (frozen) centroid model over an embeddings
-    * table: (vec_id, cid, rd2). Persists the reloaded centroid relation
-    * into `onCache`'s scope (callers materialize then release). */
-  def assignWithKmeans(spark: SparkSession, e: DataFrame, modelUri: String,
-      onCache: DataFrame => Unit = graft.core.QueryCaches.report): DataFrame =
+    * table: (vec_id, cid, rd2). The reloaded centroid relation is cached
+    * in the caller's active [[graft.core.QueryCaches]] scope (callers
+    * materialize, then release it). */
+  def assignWithKmeans(spark: SparkSession, e: DataFrame, modelUri: String): DataFrame =
     graft.queries.KmeansFit.assignCentroids(spark, e,
-      spark.read.parquet(s"$modelUri/cent"), onCache)
+      spark.read.parquet(s"$modelUri/cent"))
 
   /** DAG worker: run the Lloyd loop over an embeddings table and persist
     * the centroid model (overwrite, the Ml.Trainer convention). */
@@ -80,9 +78,8 @@ object CorpusKmeans {
       require(table.nonEmpty && modelUri.nonEmpty && dest.nonEmpty,
         "'embeddings_table', 'model_uri' and 'destination_table' are required")
       val scope = new graft.core.QueryCaches.CacheScope
-      try {
-        val out = assignWithKmeans(spark, Workers.resolveTable(spark, table),
-          modelUri, onCache = scope.collect)
+      try scope {
+        val out = assignWithKmeans(spark, Workers.resolveTable(spark, table), modelUri)
         Workers.writeTable(out, dest, overwrite = Workers.bool(params, "overwrite", default = true))
       } finally scope.release()
       ctx.log(s"Assigned $table with $modelUri -> $dest")

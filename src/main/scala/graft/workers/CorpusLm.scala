@@ -24,16 +24,18 @@ object CorpusLm {
   /** Fit the bigram LM on a documents table and persist it; the corpus is
     * tokenized once. */
   def trainLm(docs: DataFrame, modelUri: String): Long = {
-    val (pairs, lm) = BigramLm.fit(docs)
-    try {
+    // the cached pair multiplicities live until the model tables are written
+    val scope = new graft.core.QueryCaches.CacheScope
+    try scope {
+      val (_, lm) = BigramLm.fit(docs)
       lm.cb.write.mode("overwrite").parquet(s"$modelUri/cb")
       lm.cu.write.mode("overwrite").parquet(s"$modelUri/cu")
       val s = docs.sparkSession
       import s.implicits._
       Seq(lm.vocab).toDF("vocab").coalesce(1)
         .write.mode("overwrite").parquet(s"$modelUri/meta")
-    } finally pairs.unpersist()
-    lm.vocab
+      lm.vocab
+    } finally scope.release()
   }
 
   /** Score a documents table with a persisted (frozen) bigram LM. */

@@ -1,6 +1,6 @@
 package graft.workers
 
-import graft.core.Dag
+import graft.core.{Dag, QueryCaches}
 import graft.core.Dag.{Worker, WorkerContext}
 import graft.core.Spec.WorkerValue
 import graft.plans.{MlCompiler, MlModelPipelines}
@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
  * copy. Tables land in the session catalog under `{bq_dataset_id}.` so
  * the Output step's genuine SQL script and the Upload worker resolve them
  * exactly like the reference's `{project}.{dataset}.X` ids.
+ *
+ * Each job builds under its own [[graft.core.QueryCaches]] scope, released
+ * in a `finally`: these workers run on a LONG-LIVED scheduler session
+ * (daily predictive cron), so a cache a job or a failed attempt left
+ * behind (the events slice) would live until the session dies.
  */
 object MlModelJobs {
 
@@ -41,27 +46,14 @@ object MlModelJobs {
   private def fpv(spark: SparkSession, cfg: MlModelSpec): DataFrame =
     MlCompiler.firstPartyCte(Workers.resolveTable(spark, cfg.fpTable), cfg.fpRoles.get)
 
-  /** Per-job collector for the relations the dataset build persists.
-    * These workers run on a LONG-LIVED scheduler session (daily predictive
-    * cron), so "Verify/Bench clearCache between queries" does not apply —
-    * each job frees its own caches after materializing its output table,
-    * or every nightly run leaks a cached events slice until the session
-    * dies. */
-  private final class CacheScope {
-    private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def collect(df: DataFrame): Unit = cached += df
-    def release(): Unit = { cached.foreach(_.unpersist(false)); cached.clear() }
-  }
-
   /** Step dataset per the model's input source (`compiler.py:109-206`
     * VariableSet dispatch): GA-only, first-party-only, or the combined
     * path where the GA composition is semi-join-restricted to first-party
     * ids and the fp features ride along. */
   private def datasetFor(spark: SparkSession, cfg: MlModelSpec,
-      step: MlCompiler.Step, scope: CacheScope): DataFrame = cfg.source match {
+      step: MlCompiler.Step): DataFrame = cfg.source match {
     case MlModelPipelines.GoogleAnalytics =>
-      MlCompiler.dataset(spark, ga4(spark, cfg), cfg.dataset, step,
-        onCache = scope.collect)
+      MlCompiler.dataset(spark, ga4(spark, cfg), cfg.dataset, step)
     case MlModelPipelines.FirstParty =>
       MlCompiler.firstPartyDataset(spark, fpv(spark, cfg), cfg.dataset, step)
     case MlModelPipelines.GoogleAnalyticsAndFirstParty =>
@@ -69,8 +61,7 @@ object MlModelJobs {
       // contributes ids + features (an fp first_value would collide with
       // the GA trigger's column in the uv join)
       MlCompiler.dataset(spark, ga4(spark, cfg), cfg.dataset, step,
-        firstParty = Some(fpv(spark, cfg).drop("label", "trigger_date", "first_value")),
-        onCache = scope.collect)
+        firstParty = Some(fpv(spark, cfg).drop("label", "trigger_date", "first_value")))
   }
 
   /** The Output script scans the `events_*` / `__TABLES_SUMMARY__`
@@ -97,9 +88,8 @@ object MlModelJobs {
     * predictions table: classification exposes the positive-class
     * probability as scalar `probability` (`model_bqml.sql:313-316`),
     * regression the raw score as `predicted_label`. */
-  private def scored(spark: SparkSession, cfg: MlModelSpec, step: MlCompiler.Step,
-      scope: CacheScope): DataFrame = {
-    val ds = datasetFor(spark, cfg, step, scope)
+  private def scored(spark: SparkSession, cfg: MlModelSpec, step: MlCompiler.Step): DataFrame = {
+    val ds = datasetFor(spark, cfg, step)
     val out = PipelineModel.load(modelUri(cfg)).transform(ds)
     if (cfg.isClassification)
       out.withColumn("__p", vector_to_array(col("probability")).getItem(1))
@@ -117,10 +107,11 @@ object MlModelJobs {
     def execute(ctx: WorkerContext): Unit = {
       val cfg = cfgOf(params)
       ensureDb(spark, cfg)
-      val scope = new CacheScope
-      val ds = datasetFor(spark, cfg, MlCompiler.Training, scope)
-      Workers.writeTable(ds, cfg.table("training_dataset"), overwrite = true)
-      scope.release() // the table is materialized; the build caches are done
+      val scope = new QueryCaches.CacheScope
+      try scope {
+        Workers.writeTable(datasetFor(spark, cfg, MlCompiler.Training),
+          cfg.table("training_dataset"), overwrite = true)
+      } finally scope.release()
       new Ml.Trainer(spark, Map(
         "training_table" -> WorkerValue.S(cfg.table("training_dataset")),
         "model_type" -> WorkerValue.S(cfg.modelType),
@@ -140,14 +131,13 @@ object MlModelJobs {
     def execute(ctx: WorkerContext): Unit = {
       val cfg = cfgOf(params)
       ensureDb(spark, cfg)
-      val scope = new CacheScope
-      val preds = scored(spark, cfg, MlCompiler.ConversionValues, scope)
-        .select(col("unique_id"), col("label"), col("probability"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cv = MlCompiler.conversionValues(spark, preds, cfg.dataset, scope.collect)
-      Workers.writeTable(cv, cfg.table("conversion_values"), overwrite = true)
-      preds.unpersist()
-      scope.release()
+      val scope = new QueryCaches.CacheScope
+      try scope {
+        val preds = QueryCaches.cached(scored(spark, cfg, MlCompiler.ConversionValues)
+          .select(col("unique_id"), col("label"), col("probability")))
+        Workers.writeTable(MlCompiler.conversionValues(spark, preds, cfg.dataset),
+          cfg.table("conversion_values"), overwrite = true)
+      } finally scope.release()
       ctx.log(s"Conversion values written: ${cfg.table("conversion_values")}")
     }
   }
@@ -159,10 +149,11 @@ object MlModelJobs {
     def execute(ctx: WorkerContext): Unit = {
       val cfg = cfgOf(params)
       ensureDb(spark, cfg)
-      val scope = new CacheScope
-      val preds = scored(spark, cfg, MlCompiler.Predicting, scope)
-      Workers.writeTable(preds, cfg.table("predictions"), overwrite = true)
-      scope.release()
+      val scope = new QueryCaches.CacheScope
+      try scope {
+        Workers.writeTable(scored(spark, cfg, MlCompiler.Predicting),
+          cfg.table("predictions"), overwrite = true)
+      } finally scope.release()
       registerOutputViews(spark, cfg)
       ctx.log(s"Predictions written: ${cfg.table("predictions")}")
     }

@@ -260,6 +260,21 @@ class MlPipelinesSpec extends AnyFunSuite with SparkFixture {
         .params.find(_.name == "script").get.value)
   }
 
+  test("an ML worker whose step fails releases the caches its build made") {
+    val noCtx = new Dag.WorkerContext {
+      def params: Map[String, Spec.WorkerValue] = Map.empty
+      def generalSettings: Map[String, String] = Map.empty
+      def enqueue(wc: String, p: Map[String, Spec.WorkerValue], d: Int): Unit = ()
+    }
+    spark.catalog.clearCache()
+    // no model was ever trained under this work dir: scoring throws after
+    // the dataset build cached its events slice
+    val cfg = demoCfg(workDir = Files.createTempDirectory("graft_mlpipe_untrained").toString)
+    intercept[Exception](new graft.workers.MlModelJobs.ConversionValues(spark,
+      Map("ml_model" -> Spec.WorkerValue.S(toJson(cfg)))).execute(noCtx))
+    assert(spark.sharedState.cacheManager.isEmpty, "the failed step's events slice stayed cached")
+  }
+
   test("compiled training + predictive pipelines run end-to-end on the wildcard layout") {
     val workDir = Files.createTempDirectory("graft_mlpipe").toString
     val cfg = demoCfg(modelType = "LOGISTIC_REG", workDir = workDir)

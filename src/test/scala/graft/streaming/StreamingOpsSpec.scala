@@ -341,6 +341,26 @@ class StreamingOpsSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("decontaminationStream: the caller's scope releases the static benchmark row after stop") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    s.catalog.clearCache()
+    val bench = Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
+    val in = MemoryStream[(Long, String)]
+    val scope = new graft.core.QueryCaches.CacheScope
+    val q = scope(StreamingOps.decontaminationStream(in.toDF().toDF("doc_id", "text"), bench)
+      .writeStream.format("memory").queryName("decontam_scope").outputMode("append").start())
+    try {
+      in.addData((2L, "the quick brown fox jumps over the lazy dog again"))
+      q.processAllAvailable()
+      assert(s.table("decontam_scope").count() == 1)
+      assert(!s.sharedState.cacheManager.isEmpty, "the benchmark row is cached while the stream runs")
+    } finally q.stop()
+    scope.release()
+    assert(s.sharedState.cacheManager.isEmpty, "the benchmark row outlived stop() and release()")
+  }
+
   test("semanticDecontamStream: online verdicts equal the batch embedding-cosine gate") {
     val s = spark
     import s.implicits._

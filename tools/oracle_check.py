@@ -100,6 +100,8 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
+    # one line per query, so a redirected run shows progress as it goes
+    sys.stdout.reconfigure(line_buffering=True)
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
     sys.exit(main(sf, out))
