@@ -9,14 +9,15 @@ import org.apache.spark.sql.SparkSessionExtensions
  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
  * }}}
  *
- * installs `farm_fingerprint`, `shingle_set`, `affine_minhash`,
- * `sorted_intersect_size`, `dot_f64` and `winnow_fp` into every session the
- * cluster creates — the deployment shape a 1000-executor installation uses,
- * where per-session `GraftFunctions.register` calls in application code are
- * fragile (e.g. thrift/Connect servers that create sessions the app never
- * sees). The injected builders are the same instances the session-level
- * registration uses ([[graft.functions.GraftFunctions.builders]]), so SQL
- * text behaves identically through either path.
+ * installs every graft expression (`farm_fingerprint`, `shingle_set`,
+ * `affine_minhash`, ...) under its SQL name into every session the cluster
+ * creates, so SQL text can call them in sessions the application never
+ * sees (e.g. thrift/Connect servers). DataFrame code needs neither this
+ * nor `GraftFunctions.register`: the Column helpers build the expressions
+ * directly. The injected builders are the same instances the
+ * session-level registration uses
+ * ([[graft.functions.GraftFunctions.builders]]), so SQL text behaves
+ * identically through either path.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit =

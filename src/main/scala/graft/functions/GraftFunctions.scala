@@ -3,21 +3,21 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 
 /**
- * Registration + Column-level API for graft's custom Catalyst expressions.
+ * Column-level API and SQL registration for graft's custom Catalyst
+ * expressions.
  *
- * `register(spark)` installs them into the session's function registry so
- * they are usable from SQL text (the BQ-dialect layer relies on this for
- * `FARM_FINGERPRINT` in user scripts).
+ * The Column helpers build the expression case classes directly, so
+ * DataFrame code needs nothing from the session. [[register]] is for SQL
+ * text only: it installs the same expressions into a session's function
+ * registry under their SQL names (the BQ-dialect layer relies on this for
+ * `FARM_FINGERPRINT` in user scripts; [[graft.GraftExtensions]] injects the
+ * same [[builders]] cluster-wide).
  */
 object GraftFunctions {
 
-  /** The full custom-expression surface as (identifier, info, builder)
-    * triples — one list shared by session-level [[register]] and the
-    * cluster-wide [[graft.GraftExtensions]] injection path, so the two can
-    * never drift. */
   /** Constant-parameter extraction for the SQL builders: these functions
     * take their tuning parameters as literals (a non-foldable or
     * wrong-typed argument in SQL text should fail analysis with a message,
@@ -46,6 +46,10 @@ object GraftFunctions {
     }
   }
 
+  /** The full custom-expression surface as (identifier, info, builder)
+    * triples — one list shared by session-level [[register]] and the
+    * cluster-wide [[graft.GraftExtensions]] injection path, so the two can
+    * never drift. */
   val builders: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("farm_fingerprint"),
       new ExpressionInfo(classOf[FarmFingerprint].getName, "farm_fingerprint"),
@@ -78,6 +82,7 @@ object GraftFunctions {
       (children: Seq[Expression]) => GreedyPairCount(children(0),
         constLongs(children(1), "greedy_pair_count", "pairs"))))
 
+  /** Makes the expressions callable by name from `spark`'s SQL text. */
   def register(spark: SparkSession): Unit = {
     if (!isRegistered(spark)) {
       builders.foreach { case (id, info, builder) =>
@@ -90,41 +95,32 @@ object GraftFunctions {
     spark.sessionState.functionRegistry
       .functionExists(FunctionIdentifier("farm_fingerprint"))
 
-  /** BigQuery-compatible FARM_FINGERPRINT as a Column op (requires register). */
-  def farm_fingerprint(c: Column): Column = call_function("farm_fingerprint", c)
+  /** BigQuery-compatible FARM_FINGERPRINT as a Column op. */
+  def farm_fingerprint(c: Column): Column = column(FarmFingerprint(expression(c)))
 
-  /** |A ∩ B| of two sorted distinct string arrays (requires register). */
+  /** |A ∩ B| of two sorted distinct string arrays. */
   def sorted_intersect_size(a: Column, b: Column): Column =
-    call_function("sorted_intersect_size", a, b)
+    column(SortedIntersectSize(expression(a), expression(b)))
 
-  /** Full MinHash signature: min of each affine permutation (requires register). */
-  def affine_minhash(hashes: Column, a: Seq[Long], b: Seq[Long]): Column = {
-    import org.apache.spark.sql.functions.typedLit
-    call_function("affine_minhash", hashes, typedLit(a.toArray), typedLit(b.toArray))
-  }
+  /** Full MinHash signature: min of each affine permutation. */
+  def affine_minhash(hashes: Column, a: Seq[Long], b: Seq[Long]): Column =
+    column(AffineMinHash(expression(hashes), a, b))
 
-  /** Index-ordered dot product of two double arrays (requires register). */
-  def dot_f64(a: Column, b: Column): Column = call_function("dot_f64", a, b)
+  /** Index-ordered dot product of two double arrays. */
+  def dot_f64(a: Column, b: Column): Column = column(DotF64(expression(a), expression(b)))
 
-  /** Sorted distinct n-word shingles of a string (requires register). */
-  def shingle_set(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("shingle_set", text, lit(n))
-  }
+  /** Sorted distinct n-word shingles of a string. */
+  def shingle_set(text: Column, n: Int): Column = column(ShingleSet(expression(text), n))
 
-  /** Distinct winnowing fingerprints of a string (requires register). */
-  def winnow_fp(text: Column, k: Int, w: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("winnow_fp", text, lit(k), lit(w))
-  }
+  /** Distinct winnowing fingerprints of a string. */
+  def winnow_fp(text: Column, k: Int, w: Int): Column =
+    column(WinnowFp(expression(text), k, w))
 
-  /** popcount(a & b) of two equal-length long-array bitmasks (requires register). */
+  /** popcount(a & b) of two equal-length long-array bitmasks. */
   def mask_intersect_bits(a: Column, b: Column): Column =
-    call_function("mask_intersect_bits", a, b)
+    column(MaskIntersectBits(expression(a), expression(b)))
 
-  /** Greedy 2-cp-piece subword count under an encoded merge table (requires register). */
-  def greedy_pair_count(word: Column, pairs: Seq[Long]): Column = {
-    import org.apache.spark.sql.functions.typedLit
-    call_function("greedy_pair_count", word, typedLit(pairs.toArray))
-  }
+  /** Greedy 2-cp-piece subword count under an encoded merge table. */
+  def greedy_pair_count(word: Column, pairs: Seq[Long]): Column =
+    column(GreedyPairCount(expression(word), pairs))
 }

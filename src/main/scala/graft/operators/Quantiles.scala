@@ -71,8 +71,7 @@ object Quantiles {
       rankCol: String, totalCol: String): DataFrame = {
     Seq("__mid", "__pid", "__lrn").foreach(h => require(!df.columns.contains(h),
       s"withGlobalRank: input must not contain helper column '$h'"))
-    val parts = df.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(df.rdd.getNumPartitions)
+    val parts = graft.queries.Tables.parallelism(df.sparkSession)
     // `ranged` stays cached for the lifetime of the returned plan, owned
     // by the active scope ([[graft.core.QueryCaches]]) — the per-partition
     // offsets were computed against this exact materialization, and a
@@ -129,8 +128,7 @@ object Quantiles {
     require(df.schema(valueCol).dataType ==
       org.apache.spark.sql.types.LongType,
       s"withRunningTotal: '$valueCol' must be LONG (exact integer prefix sums)")
-    val parts = df.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(df.rdd.getNumPartitions)
+    val parts = graft.queries.Tables.parallelism(df.sparkSession)
     // same input and `ranged` cache contract as withGlobalRank
     val (ranged, sums) = withTransientInput(df) { in =>
       val ranged = cached(in.repartitionByRange(parts, order: _*)

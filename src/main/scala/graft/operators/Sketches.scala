@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumns.{column, expression}
 
 /**
  * Probabilistic-sketch operators — the approximate scale paths that stand
@@ -13,33 +16,6 @@ import org.apache.spark.sql.functions._
  * error bound (no false negatives) against the exact operators.
  */
 object Sketches {
-
-  /** Spark ships `BloomFilterAggregate` / `BloomFilterMightContain` as
-    * internal expressions (they back the optimizer's runtime row-level
-    * filtering) without SQL registration; expose them to this session so
-    * the sketch path stays pure codegen expressions — no UDF. */
-  private def registerBloom(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_bloom_agg"))) {
-      reg.registerFunction(FunctionIdentifier("graft_bloom_agg"),
-        new ExpressionInfo(
-          "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
-          "graft_bloom_agg"),
-        (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(args(0), args(1), args(2))
-            .toAggregateExpression())
-      reg.registerFunction(FunctionIdentifier("graft_bloom_might_contain"),
-        new ExpressionInfo(
-          "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain",
-          "graft_bloom_might_contain"),
-        (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          org.apache.spark.sql.catalyst.expressions
-            .BloomFilterMightContain(args(0), args(1)))
-    }
-  }
 
   /**
    * Bloom-filter decontamination prefilter. The exact decontamination scan
@@ -58,7 +34,10 @@ object Sketches {
    * `bloom_filter_agg(xxhash64(...))` constructs the sketch distributed
    * (per-partition filters merged in the aggregate), and
    * `might_contain(<filter literal>, xxhash64(col))` is a per-row probe
-   * on the scan — no UDF, no join, no shuffle.
+   * on the scan — no UDF, no join, no shuffle. Both are Spark-internal
+   * expressions (they back the optimizer's runtime row-level filter)
+   * with no SQL name, so they are built directly through
+   * [[org.apache.spark.sql.graft.ExpressionColumns]].
    *
    * @return (candidate relation: input rows whose `shingleCol` might be
    *         in the benchmark — the only rows an exact verify must touch;
@@ -67,23 +46,22 @@ object Sketches {
   def bloomPrefilter(stream: DataFrame, shingleCol: String,
       benchShingles: DataFrame, benchCol: String,
       expectedItems: Long, fpp: Double = 0.01): (DataFrame, Long) = {
-    registerBloom(benchShingles.sparkSession)
     // optimal bit count m = -n·ln(p)/ln(2)²; floor at 64 bits for
     // degenerate/empty benchmarks
     val nBits = math.max(64L,
       math.ceil(-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
     val bfBytes = benchShingles
-      .agg(call_function("graft_bloom_agg", xxhash64(col(benchCol)),
-        lit(math.max(1L, expectedItems)), lit(nBits)))
+      .agg(column(new BloomFilterAggregate(expression(xxhash64(col(benchCol))),
+        expression(lit(math.max(1L, expectedItems))), expression(lit(nBits)))
+        .toAggregateExpression()))
       .first().getAs[Array[Byte]](0)
     // an EMPTY benchmark has nothing to match: constant-false keeps the
     // schema and folds to an empty relation (bloom_filter_agg yields NULL
     // on zero rows)
-    registerBloom(stream.sparkSession)
     val probe: Column =
       if (bfBytes == null) lit(false)
-      else call_function("graft_bloom_might_contain", lit(bfBytes),
-        xxhash64(col(shingleCol)))
+      else column(BloomFilterMightContain(expression(lit(bfBytes)),
+        expression(xxhash64(col(shingleCol)))))
     (stream.filter(probe), if (bfBytes == null) 0L else bfBytes.length.toLong)
   }
 

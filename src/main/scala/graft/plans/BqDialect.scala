@@ -325,6 +325,13 @@ object BqDialect {
     out.toString
   }
 
+  /** Runs one BQ-dialect statement as Spark SQL, with graft's functions
+    * (`FARM_FINGERPRINT`, ...) callable from its text. */
+  def sql(spark: SparkSession, stmt: String): DataFrame = {
+    GraftFunctions.register(spark)
+    spark.sql(rewrite(stmt))
+  }
+
   /**
    * Run a multi-statement script with DECLARE/SET scripting
    * (output.sql:2-7,19 shape): scalar variables are evaluated driver-side

@@ -302,7 +302,6 @@ object MlCompiler {
    */
   def dataset(s: SparkSession, ga4: DataFrame, cfg: MlModel, step: Step,
       firstParty: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.register(s)
     var ev = eventsCte(ga4, cfg, step)
     firstParty.foreach { fpv =>
       ev = ev.join(fpv.select(col("unique_id")), Seq("unique_id"), "left_semi")
@@ -318,7 +317,7 @@ object MlCompiler {
     // explicit repartition also survives AQE (a coalesced tiny exchange
     // would serialize the window/agg work on one core). The cache lives
     // until the owning scope is released.
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
+    val parts = graft.queries.Tables.parallelism(s)
     ev = graft.core.QueryCaches.cached(ev.repartition(parts, col("unique_id")))
     val fe = firstEngagement(ev, cfg)
     val av = analyticsVariables(ev, fe, cfg)
@@ -393,9 +392,7 @@ object MlCompiler {
    * the end bound shifted back one second — plus the hash split, then the
    * step projection (no GA composition).
    */
-  def firstPartyDataset(s: SparkSession, fpv: DataFrame, cfg: MlModel,
-      step: Step): DataFrame = {
-    GraftFunctions.register(s)
+  def firstPartyDataset(fpv: DataFrame, cfg: MlModel, step: Step): DataFrame = {
     // NOTE the deliberate off-by-one vs the GA suffix window: the
     // first-party DATETIME window ends one second BEFORE the end day's
     // midnight (DATETIME_SUB(..., INTERVAL 1 SECOND), model_bqml.sql:277;
@@ -410,24 +407,6 @@ object MlCompiler {
       case Predicting => ()
     }
     finalSelect(d.drop("trigger_date"), cfg, step)
-  }
-
-  /** First-party variable discovery (`bigquery.py:150-162`): usable
-    * feature columns are the fields whose BQ `field_type` is neither
-    * RECORD nor JSON. RECORD covers both struct AND array-of-struct
-    * (a REPEATED RECORD keeps field_type RECORD); a repeated scalar
-    * keeps its scalar field_type and passes, as in the reference.
-    * Returns (name, typeName). */
-  def firstPartyVariables(df: DataFrame): Seq[(String, String)] = {
-    import org.apache.spark.sql.types.{ArrayType, StructType}
-    def isRecordOrJson(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: StructType => true
-      case ArrayType(e, _) => isRecordOrJson(e)
-      case other => other.typeName == "variant"
-    }
-    df.schema.fields.toSeq
-      .filterNot(f => isRecordOrJson(f.dataType))
-      .map(f => f.name -> f.dataType.typeName)
   }
 
   /**

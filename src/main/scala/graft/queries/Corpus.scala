@@ -400,7 +400,6 @@ object Corpus {
    * overlap 0), so the check stays non-vacuous at any scale factor.
    */
   def decontamOverlap(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val sh = docs(s, dir)
       .select(col("doc_id"), col("source"),
         GraftFunctions.shingle_set(col("text"), DecontamShingle).as("shs"))
@@ -648,7 +647,6 @@ object Corpus {
     //    convention the curve must not count).
     // Row set, values and dup_rate expression are unchanged: an order n
     // appears iff ≥ 1 gram exists (inner join on the distinct side).
-    graft.functions.GraftFunctions.register(s)
     val nw = size(Text.words(col("text"))).cast("long")
     val orders = 1 to 5
     val totals = docs(s, dir)
@@ -686,7 +684,6 @@ object Corpus {
     * the lexicographically FIRST source — data-derived (a metadata-sized
     * 1-row aggregate), so the operator is non-vacuous on any corpus. */
   private def shinglesBySource(s: SparkSession, dir: String): (String, DataFrame) = {
-    GraftFunctions.register(s)
     val benchSrc = docs(s, dir).agg(min(col("source"))).first().getString(0)
     val sh = docs(s, dir).select(col("source"),
       explode(GraftFunctions.shingle_set(col("text"), DecontamShingle)).as("shingle"))
@@ -835,11 +832,10 @@ object Corpus {
    * fingerprint, already corpus-collapsed.
    */
   def dedupClusterSizes(s: SparkSession, dir: String): DataFrame = {
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(32)
+    val parts = parallelism(s)
     docs(s, dir)
       .repartition(parts, col("doc_id")) // spread before the tokenize+hash kernel
-      .select(Text.bowFp(s, col("text")).as("fp"))
+      .select(Text.bowFp(col("text")).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("csize"))
       .groupBy(col("csize")).agg(count(lit(1)).as("n_clusters"))
       .withColumn("n_docs", col("csize") * col("n_clusters"))

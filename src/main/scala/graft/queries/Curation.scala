@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.functions.GraftFunctions
 import graft.operators.DriverCollect
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -129,7 +128,7 @@ object Curation {
   /** The distributed propagation path (any edge-set size). */
   private[queries] def iterativeComponents(allDocs: DataFrame, pairs: DataFrame): DataFrame = {
     val s = allDocs.sparkSession
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
+    val parts = parallelism(s)
     // both directions once, co-partitioned on the probe key of the
     // per-round join; persisted — every round re-reads it
     val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
@@ -231,7 +230,7 @@ object Curation {
   private[queries] def starContractionComponents(allDocs: DataFrame,
       seedEdges: DataFrame): DataFrame = {
     val s = allDocs.sparkSession
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
+    val parts = parallelism(s)
     val reliable = useReliableCheckpoint(s)
     def ckpt(df: DataFrame): DataFrame =
       roundCheckpoint(df.repartition(parts, col("u")), reliable)
@@ -363,7 +362,6 @@ object Curation {
     * re-partitions by comp_id) must not pay a corpus-wide range sort whose
     * ordering the next exchange destroys. */
   private def dedupComponentsCore(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val (setPairs, groups) = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
     // persisted across the size probe, so an overflowing probe hands the
     // distributed path materialized pairs; no plan returned by
@@ -453,13 +451,12 @@ object Curation {
    */
   def pipelineCuration(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
+    val parts = parallelism(s)
     val toks = load(s, dir, "documents")
       .repartition(parts, col("doc_id")) // spread the CPU-heavy tokenize (see Text.dedupBowFp)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         size(Text.words(col("text"))).cast("long").as("n_ws"),
-        Text.bowFp(s, col("text")).as("bow_fp"))
+        Text.bowFp(col("text")).as("bow_fp"))
     // keeper as a window min, not groupBy+self-join: the CPU-heavy
     // tokenize scan above runs ONCE (a self-join consumes the unpersisted
     // relation twice), and the single shuffle is the window's — the same
@@ -517,11 +514,10 @@ object Curation {
    * = the join-row count — identical results to the per-doc join.
    */
   def contaminationCheck(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
+    val parts = parallelism(s)
     val fp = load(s, dir, "documents")
       .repartition(parts, col("doc_id")) // spread the tokenize kernel
-      .select(col("doc_id"), col("source"), Text.bowFp(s, col("text")).as("bow_fp"))
+      .select(col("doc_id"), col("source"), Text.bowFp(col("text")).as("bow_fp"))
       // NULL fingerprints (empty word set) can never equi-join; drop
       // them before the collapse so they don't shuffle.
       .filter(col("bow_fp").isNotNull)
@@ -606,7 +602,6 @@ object Curation {
    * ranks are comparative, not a probability simplex).
    */
   def dedupGraphPagerank(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val nDocs = load(s, dir, "documents").count()
     if (nDocs == 0) {
       return load(s, dir, "documents")
@@ -736,7 +731,6 @@ object Curation {
    * reads first.
    */
   def pipelineDedupGraph(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val nDocs = load(s, dir, "documents").count()
     if (nDocs == 0) {
       return load(s, dir, "documents")
@@ -790,7 +784,6 @@ object Curation {
    * integers, the coefficient one final rounded division.
    */
   def dedupGraphTriangles(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val d38 = DecimalType(38, 0)
     val (setPairs, _) = Dedup.jaccardSetGraph(Dedup.docWords(s, dir))
     // canonical undirected edges between set representatives; distinct
@@ -933,7 +926,6 @@ object Curation {
    * metadata-sized relation. Counts exact; two rounded divisions per row.
    */
   def dedupGraphModularity(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val pairs = Dedup.jaccardPairs(Dedup.docWords(s, dir))
     val srcs = Tables.spreadDocs(s, dir).select(col("doc_id"), col("source"))
     val e = pairs.select(col("da"), col("db"))
@@ -1115,7 +1107,6 @@ object Curation {
    * budget, so no diameter cliff exists here.
    */
   def dedupGraphKcore(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     // Optimization r11: peel on the COLLAPSED set graph ([[kcorePeelSuper]]
     // — exactness argued there), never the expanded doc-pair graph. The
     // doc-level answer is reconstructed exactly: every member of set S
@@ -1206,7 +1197,6 @@ object Curation {
    * edge list itself.
    */
   def dedupGraphAssortativity(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val d38 = DecimalType(38, 0)
     // Optimization r11: the correlation sums fold on the COLLAPSED
     // [[SetGraph]]. Every member of set S has the same degree

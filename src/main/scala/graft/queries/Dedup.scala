@@ -29,8 +29,7 @@ object Dedup {
     Tables.spreadDocs(s, dir)
 
   /** (doc_id, lang, words): sorted distinct word set per doc, via the
-    * codegen [[GraftFunctions.shingle_set]] kernel (n = 1). Callers must
-    * have called `GraftFunctions.register`. */
+    * codegen [[GraftFunctions.shingle_set]] kernel (n = 1). */
   private[queries] def docWords(s: SparkSession, dir: String): DataFrame =
     spreadDocs(s, dir)
       .select(col("doc_id"), col("lang"),
@@ -88,7 +87,6 @@ object Dedup {
    *    the vocabulary is unbounded and must never be broadcast.
    */
   def dedupJaccardWords(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     jaccardPairs(docWords(s, dir))
   }
 
@@ -102,7 +100,6 @@ object Dedup {
    * low even when per-word frequency is degenerate).
    */
   def dedupJaccardNgrams(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val base = spreadDocs(s, dir)
       .select(col("doc_id"), col("lang"),
         GraftFunctions.shingle_set(col("text"), 3).as("words"))
@@ -205,8 +202,7 @@ object Dedup {
       .transform(cached)
     if (g.count() > DenseSetsCap) { g.unpersist(); return ppjoinPairs(dw) }
 
-    val parts = dw.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(32)
+    val parts = parallelism(dw.sparkSession)
     // The pair loop runs over NARROW (lang, mask) rows only — members
     // arrays collectively hold every doc_id in the corpus, so carrying
     // them through the broadcast would ship the whole corpus's ids to the
@@ -278,8 +274,7 @@ object Dedup {
       .transform(cached)
     if (g.count() > DenseSetsCap) { g.unpersist(); return ppjoinPairs(dw) }
 
-    val parts = dw.sparkSession.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(32)
+    val parts = parallelism(dw.sparkSession)
     // probe side explodes admissible partner popcounts; explicit
     // repartition for the same reason as densePairs — the loop is
     // CPU-bound and AQE would coalesce the byte-tiny input to one task
@@ -380,7 +375,6 @@ object Dedup {
   /** SimHash document signatures: per-bit majority vote over word hashes.
     * One explode + one agg — linear, map-side combinable. */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val ex = docWords(s, dir)
       .select(col("doc_id"), explode(col("words")).as("w"))
       .withColumn("h", wordHash32(col("w")))
@@ -477,7 +471,6 @@ object Dedup {
     * replays the whole pipeline downstream of the opaque hashes. */
   private[graft] def writeFarmAux(s: SparkSession, dir: String,
       auxDir: String): Unit = {
-    GraftFunctions.register(s)
     val docs = spreadDocs(s, dir)
     docs
       .select(explode(GraftFunctions.shingle_set(col("text"), 3)).as("shingle"))
@@ -525,7 +518,6 @@ object Dedup {
   private[graft] def bandSignatures(docs: DataFrame,
       hash32: Column => Column,
       bandKey: Seq[Column] => Column): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val base = docs
       .withColumn("shingles", GraftFunctions.shingle_set(col("text"), 3))
       .withColumn("sh_hashes", transform(col("shingles"), hash32))
@@ -739,7 +731,6 @@ object Dedup {
    * op's documented cost, not a hot-path one.
    */
   def dedupLshAudit(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val base = spreadDocs(s, dir)
       .select(col("doc_id"), col("lang"),
         GraftFunctions.shingle_set(col("text"), 3).as("words"))
@@ -895,7 +886,6 @@ object Dedup {
    * the shingle; dedup via distinct before the verify join.
    */
   def dedupContainment(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val sh = spreadDocs(s, dir)
       .select(col("doc_id"), GraftFunctions.shingle_set(col("text"), 3).as("shs"))
       .filter(size(col("shs")) > 0)
@@ -970,7 +960,6 @@ object Dedup {
    * `jac` doubles, rounded to 8 dp into exact DECIMAL sums.
    */
   def dedupBandTuning(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val pv = jaccardPairs(docWords(s, dir)).select(col("jac"))
     val sums = BandConfigs.map { case (b, r) =>
       val p = lit(1.0d) - sqChain(lit(1.0d) - sqChain(col("jac"), r), b)

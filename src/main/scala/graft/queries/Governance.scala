@@ -270,7 +270,7 @@ object Governance {
       .select(col("doc_id"), col("source"),
         when(length(normText(col("text"))) > 0, md5(normText(col("text"))))
           .as("nk"),
-        Text.bowFp(s, col("text")).as("bk"))
+        Text.bowFp(col("text")).as("bk"))
       // three consumers (two method collapses + the probe) — one scan
       .transform(cached)
     val nc = d.filter(col("nk").isNotNull).groupBy(col("nk"))
@@ -312,7 +312,6 @@ object Governance {
    * would need a source×source cross join for no audit value).
    */
   def corpusSourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val sh = docs(s, dir)
       .select(col("source"),
         explode(GraftFunctions.shingle_set(col("text"), Corpus.DecontamShingle)).as("sh"))
@@ -907,7 +906,6 @@ object Governance {
    * ≤|sources| rows.
    */
   def corpusNovelty(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sh = docs(s, dir)
       .select(col("source"),
         explode(graft.functions.GraftFunctions

@@ -153,9 +153,9 @@ object KmeansFit {
    * C ≤ 8, persisted model-sized relations above); the returned plan
    * recomputes only the LAST round from the persisted member relation.
    */
-  def fit(s: SparkSession, e0: DataFrame, rounds: Int,
+  def fit(e0: DataFrame, rounds: Int,
       target: Long = Similarity.FineCellTarget): DataFrame =
-    mStep(lloydChain(s, e0, rounds, target).last)
+    mStep(lloydChain(e0, rounds, target).last)
       .orderBy(col("cid"), col("dim"))
 
   /** The per-round assignment plans of a `rounds`-round Lloyd run: element
@@ -165,9 +165,8 @@ object KmeansFit {
     * all owned by the active [[graft.core.QueryCaches]] scope); each
     * returned plan recomputes only ITS round's assignment from the
     * persisted member relation. */
-  private[graft] def lloydChain(s: SparkSession, e0: DataFrame, rounds: Int,
+  private[graft] def lloydChain(e0: DataFrame, rounds: Int,
       target: Long = Similarity.FineCellTarget): Seq[DataFrame] = {
-    graft.functions.GraftFunctions.register(s)
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = e0.filter(col("embedding").isNotNull)
     val members = cached(memberRel(e))
@@ -214,7 +213,7 @@ object KmeansFit {
     * map-side to a single row. */
   def embedKmeansInertia(s: SparkSession, dir: String): DataFrame = {
     val decI = org.apache.spark.sql.types.DataTypes.createDecimalType(30, 12)
-    lloydChain(s, load(s, dir, "embeddings"), FitRounds)
+    lloydChain(load(s, dir, "embeddings"), FitRounds)
       .zipWithIndex.map { case (asg, i) =>
         asg.agg(count(lit(1)).as("n"),
           Similarity.microMean6(sum(col("rd2").cast(decI)), count(lit(1)))
@@ -228,8 +227,7 @@ object KmeansFit {
   /** E-step of a FROZEN model: assign every member of `e0` to its nearest
     * centroid from a trained (cid, dim, n, c_new) table — the reload half
     * of the worker round-trip. Output (vec_id, cid, rd2). */
-  def assignCentroids(s: SparkSession, e0: DataFrame, centDims: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  def assignCentroids(e0: DataFrame, centDims: DataFrame): DataFrame = {
     val members = memberRel(e0.filter(col("embedding").isNotNull))
     val cents = cached(centRelOf(centDims.select(col("cid"), col("dim"), col("c_new"))))
     val cCount = cents.count()
@@ -245,7 +243,7 @@ object KmeansFit {
   /** Contract query: [[FitRounds]] Lloyd rounds over the embeddings
     * table, final (cid, dim, n, c_new). */
   def embedKmeansFit(s: SparkSession, dir: String): DataFrame =
-    fit(s, load(s, dir, "embeddings"), FitRounds)
+    fit(load(s, dir, "embeddings"), FitRounds)
 
   // ---------------------------------------------------------------- oracle
 

@@ -108,7 +108,7 @@ object Ml {
     val c = cfg(hashSplit = false, imbalance = 1)
       .copy(suffixLo = "20240101", suffixHi = "20240125")
     val fpv = MlCompiler.firstPartyCte(fpTable(s, dir), fpRoles)
-    MlCompiler.firstPartyDataset(s, fpv, c, Training)
+    MlCompiler.firstPartyDataset(fpv, c, Training)
   }
 
   /** Combined-source dataset (fpv ⋈ analytics variables + GA behavior),

@@ -43,7 +43,6 @@ object OracleAux {
     * just its own aux output — a partial corpus must not leave the OTHER
     * oracles reading a stale aux dir from a previous run. */
   def writeAll(s: SparkSession, dir: String): Unit = {
-    GraftFunctions.register(s)
     def ifPresent(name: String)(f: org.apache.spark.sql.DataFrame => Unit): Unit =
       if (new java.io.File(s"$dir/$name.parquet").exists())
         f(s.read.parquet(s"$dir/$name.parquet"))

@@ -276,7 +276,6 @@ object Relational {
     * fingerprint itself is golden-tested vs Guava in FarmHashSpec; the
     * oracle joins it as data and replays the split arithmetic). */
   def qHashSplit(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     load(s, dir, "customer")
       .select(col("c_custkey"),
         (abs(GraftFunctions.farm_fingerprint(col("c_name"))) % 100).as("bucket"))

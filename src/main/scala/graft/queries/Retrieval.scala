@@ -130,7 +130,6 @@ object Retrieval {
    */
   def retrievalRrfFusion(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val bmRank = Window.partitionBy(zeroPart(col("doc_id")))
       .orderBy(col("score").desc, col("doc_id"))
     val bm = bm25Scored(s, dir)
@@ -205,7 +204,6 @@ object Retrieval {
    */
   def retrievalRbo(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val bmRank = Window.partitionBy(zeroPart(col("doc_id")))
       .orderBy(col("score").desc, col("doc_id"))
     val bm = bm25Scored(s, dir)
@@ -282,7 +280,6 @@ object Retrieval {
    */
   def retrievalMmrDiversify(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val anchors = Similarity.anchorVecsOf(load(s, dir, "embeddings"))
     val a0 = anchors.headOption.getOrElse(Array.empty[Double])
     val shortRows = load(s, dir, "embeddings")
@@ -385,7 +382,6 @@ object Retrieval {
    */
   def retrievalNdcg(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings").filter(col("embedding").isNotNull)
     // the labeled query panel — model parameters (anchor convention)
     val qs: Seq[(Long, Array[Double], Int)] = e

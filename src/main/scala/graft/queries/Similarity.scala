@@ -44,7 +44,6 @@ object Similarity {
 
   /** Brute-force cosine top-5: queries = vec_id < 10, candidates = rest. */
   def simBruteforceTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings")
       .filter(col("embedding").isNotNull) // failed-encoder rows are outside vector ops
       .select(col("vec_id"), dArr(col("embedding")).as("v"))
@@ -101,7 +100,6 @@ object Similarity {
     * oracle-checked output. At scale the ANN search becomes an equi-join
     * on this bucket. */
   def simLshBuckets(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val anchors = anchorVecs(s, dir)
     load(s, dir, "embeddings")
       .filter(col("vec_id") >= 8 && col("embedding").isNotNull && noModel(anchors))
@@ -129,7 +127,6 @@ object Similarity {
    * repeated queries join without re-shuffling the corpus.
    */
   def simIvfTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = anchorVecs(s, dir)
     // (dot, -j) structs: max picks the highest dot, ties the SMALLEST j —
     // matching the oracle's ORDER BY d DESC, cid ASC. With no centroids
@@ -175,7 +172,6 @@ object Similarity {
    * Scale: candidates shuffle on bucket id only; anchors broadcast.
    */
   def dedupEmbeddingCosine(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val anchors = anchorVecs(s, dir)
     // bucket is a per-row expression over the scan — the embedding rides
     // along, so neither a bucket aggregation nor a join-back exists and
@@ -251,7 +247,6 @@ object Similarity {
     * distance. Centroids are driver constants; the assignment is a pure
     * per-row codegen argmin — no join, no shuffle. */
   private def kmeansAssigned(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = anchorVecs(s, dir)
     // typed placeholder when there are no centroids (see simsArr note) —
     // the noModel guard makes the relation empty, never mis-assigned
@@ -336,7 +331,6 @@ object Similarity {
     * assignment and C (consumers size their cell salts from it). */
   private[graft] def fineModel(s: SparkSession, dir: String,
       target: Long = FineCellTarget): (DataFrame, Long) = {
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings").filter(col("embedding").isNotNull)
     val nMembers = e.filter(col("vec_id") >= 8).count()
     val c = math.max(8L, (nMembers + target - 1L) / target)
@@ -493,7 +487,6 @@ object Similarity {
    * canonicalized.
    */
   def embedSilhouette(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings").filter(col("embedding").isNotNull)
     val nMembers = e.filter(col("vec_id") >= 8).count()
     val cK = math.max(8L, (nMembers + FineCellTarget - 1L) / FineCellTarget)
@@ -584,7 +577,6 @@ object Similarity {
    * yields distinct picks at r² = 0.
    */
   def embedKcenterCoreset(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val m = load(s, dir, "embeddings")
       .filter(col("vec_id") >= 8 && col("embedding").isNotNull)
@@ -733,7 +725,6 @@ object Similarity {
   }
 
   def embedPqAssign(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = anchorVecs(s, dir)
     val sub = cents.headOption.map(_.length).getOrElse(64) / PqM
     val members = load(s, dir, "embeddings")
@@ -770,7 +761,6 @@ object Similarity {
   /** The ADC core: every (query, candidate) estimate with its per-query
     * rank — topk cuts at 5, the re-ranker takes a deeper shortlist. */
   private def pqAdcRanked(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = anchorVecs(s, dir)
     val sub = cents.headOption.map(_.length).getOrElse(64) / PqM
     val queries10: Seq[(Long, Array[Double])] = load(s, dir, "embeddings")
@@ -913,7 +903,6 @@ object Similarity {
    * one (qid, neighbor) equi-join and a ≤|Q| rollup.
    */
   def simPqRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings")
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), dArr(col("embedding")).as("v"))
@@ -1087,7 +1076,6 @@ object Similarity {
    * rounded to 6 dp, per-source means via exact DECIMAL sums.
    */
   def embedSourceDrift(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(30, 8)
     val e = load(s, dir, "embeddings")
       .filter(col("embedding").isNotNull)
@@ -1130,7 +1118,6 @@ object Similarity {
    * candidate sweep); the vote rollup adds ≤|queries|·k rows.
    */
   def simKnnAccuracy(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings")
       .filter(col("embedding").isNotNull && col("label").isNotNull)
       .select(col("vec_id"), dArr(col("embedding")).as("v"),
@@ -1272,7 +1259,6 @@ object Similarity {
    * the audit itself is one (qid, neighbor) equi-join and a ≤|Q| rollup.
    */
   def simIvfRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings")
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), dArr(col("embedding")).as("v"))
@@ -1322,7 +1308,6 @@ object Similarity {
    * AQE-statistics round-trip convention).
    */
   def simIvfMultiprobe(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cents = anchorVecs(s, dir)
     // (dot, -j) structs — the simIvfTopk ranking convention: max picks the
     // highest dot, ties the SMALLEST centroid id; typed placeholder keeps
@@ -1466,7 +1451,6 @@ object Similarity {
    * same IEEE ops both engines.
    */
   def decontamSemantic(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val anchors = anchorVecs(s, dir)
     val m = load(s, dir, "embeddings")
       .filter(col("vec_id") >= 8 && col("embedding").isNotNull && noModel(anchors))
@@ -1523,7 +1507,6 @@ object Similarity {
     * norms). */
   private def pcaPowerCore(s: SparkSession, dir: String,
       means: Seq[Double]): (Seq[Double], Seq[Double]) = {
-    graft.functions.GraftFunctions.register(s)
     val dims = means.length
     def r(x: Double, scale: Int): Double =
       BigDecimal.valueOf(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
@@ -1605,7 +1588,6 @@ object Similarity {
    * both engines.
    */
   def embedPcaDebias(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // one dim-stats scan feeds BOTH the centering means and the power
     // iteration (embedPcaPower re-collects it when run standalone)
     val means = dimMeans(s, dir)
@@ -1689,7 +1671,6 @@ object Similarity {
    * identical inputs into the closed form.
    */
   def embedRpProject(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sl = typedLit(rpSigns)
     val v = dArr(col("embedding"))
     val proj = array((1 to RpK).map(r =>
@@ -1794,7 +1775,6 @@ object Similarity {
    * vec_id, recall is integer ppm.
    */
   def simMatryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings").filter(col("embedding").isNotNull)
     val anchors: Seq[(Long, Array[Double])] = e.filter(col("vec_id") < 8)
       .select(col("vec_id"), dArr(col("embedding")))
@@ -1880,7 +1860,6 @@ object Similarity {
    * cosine rounds at 6 dp; ties break by vec_id.
    */
   def simHammingRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = load(s, dir, "embeddings").filter(col("embedding").isNotNull)
     val anchors: Seq[(Long, Array[Double])] = e.filter(col("vec_id") < 8)
       .select(col("vec_id"), dArr(col("embedding")))
@@ -1954,7 +1933,6 @@ object Similarity {
    * ≤|panel|·k rows.
    */
   def embedAnnLid(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val dec8 = org.apache.spark.sql.types.DataTypes.createDecimalType(30, 8)
     val e = load(s, dir, "embeddings")
       .filter(col("embedding").isNotNull)

@@ -7,6 +7,12 @@ import org.apache.spark.sql.{Column, functions => F}
 /** Shared helpers for the driver-facing query inventory. */
 object Tables {
 
+  /** The session's `spark.sql.shuffle.partitions` — the one partition
+    * count every explicit repartition and adaptive spread sizes itself by
+    * (an unset key reads Spark's default, 200). */
+  def parallelism(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** Load one of the driver-provided parquet tables from an sf dir. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -25,6 +31,12 @@ object Tables {
   def spreadDocs(spark: SparkSession, dir: String): DataFrame =
     spreadBy(spark, load(spark, dir, "documents"))
 
+  /** Per-slot byte floor below which a spread can't pay for its shuffle:
+    * with < ~64 KB of raw input per core, the per-row kernel finishes
+    * faster than the extra stage boundary costs (measured +0.2–0.5 s per
+    * pass on a 0.6 MB corpus vs −10× wall on a 6 MB one). */
+  private val SpreadMinBytesPerSlot = 64L * 1024L
+
   /** The generic adaptive spread behind [[spreadDocs]] — round-robin
     * repartition only when the relation's layout yields fewer splits than
     * the configured parallelism (passthrough at scale; see spreadDocs).
@@ -33,15 +45,8 @@ object Tables {
     * (ScanHygieneSpec pins that discipline). Use before a per-row kernel
     * or a row-multiplying explode whose work would otherwise fuse into an
     * undersized scan stage. */
-  /** Per-slot byte floor below which a spread can't pay for its shuffle:
-    * with < ~64 KB of raw input per core, the per-row kernel finishes
-    * faster than the extra stage boundary costs (measured +0.2–0.5 s per
-    * pass on a 0.6 MB corpus vs −10× wall on a 6 MB one). */
-  private val SpreadMinBytesPerSlot = 64L * 1024L
-
   def spreadBy(spark: SparkSession, df: DataFrame): DataFrame = {
-    val parts = spark.conf.getOption("spark.sql.shuffle.partitions")
-      .map(_.toInt).getOrElse(32)
+    val parts = parallelism(spark)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (df.rdd.getNumPartitions >= parts ||
         bytes < BigInt(parts.toLong * SpreadMinBytesPerSlot)) df

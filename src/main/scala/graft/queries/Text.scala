@@ -67,21 +67,16 @@ object Text {
       .orderBy(col("lang"), col("predicted"))
   }
 
-  /** Sorted-distinct word set via the codegen kernel — identical output to
-    * `sort_array(array_distinct(words(c)))`, whose interpreted per-token
-    * lambdas dominated the fingerprint scans. */
-  private def wordSet(s: SparkSession, c: Column): Column = {
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.GraftFunctions.shingle_set(c, 1)
-  }
-
   /** NULL for an empty word set — matches DuckDB, where
     * `array_to_string([], ' ')` is NULL (empty docs carry no bag-of-words
     * identity; exact-dup grouping treats them as one NULL group). Shared
     * with [[Curation]] so the fingerprint used by dedup, the composed
-    * curation pipeline, and the contamination check can never diverge. */
-  private[queries] def bowFp(s: SparkSession, c: Column): Column = {
-    val ws = wordSet(s, c)
+    * curation pipeline, and the contamination check can never diverge.
+    * The sorted-distinct word set comes from the codegen kernel —
+    * identical output to `sort_array(array_distinct(words(c)))`, whose
+    * interpreted per-token lambdas dominated the fingerprint scans. */
+  private[queries] def bowFp(c: Column): Column = {
+    val ws = graft.functions.GraftFunctions.shingle_set(c, 1)
     when(size(ws) > 0, md5(concat_ws(" ", ws)))
   }
 
@@ -91,7 +86,7 @@ object Text {
     docs(s, dir)
       .select(col("doc_id"),
         md5(col("text")).as("content_fp"),
-        bowFp(s, col("text")).as("bow_fp"))
+        bowFp(col("text")).as("bow_fp"))
       .orderBy(col("doc_id"))
 
   /** Bag-of-words fingerprint dedup: one keeper per identical word set.
@@ -100,10 +95,10 @@ object Text {
     * kernel on one core (at scale the scan has thousands of splits and the
     * narrow repartition of raw text is noise). */
   def dedupBowFp(s: SparkSession, dir: String): DataFrame = {
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
+    val parts = parallelism(s)
     docs(s, dir)
       .repartition(parts, col("doc_id"))
-      .select(col("doc_id"), bowFp(s, col("text")).as("bow_fp"))
+      .select(col("doc_id"), bowFp(col("text")).as("bow_fp"))
       .groupBy(col("bow_fp"))
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_copies"))
       .filter(col("n_copies") > 1)
@@ -126,7 +121,6 @@ object Text {
    * documents table (and an earlier md5-per-gram variant slower still).
    */
   def textWinnowFp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .filter(length(col("text")) >= WinnowK + WinnowW - 1)
       .withColumn("fps",
@@ -171,8 +165,7 @@ object Text {
    * thresholding, so cross-engine float ties can't flip membership.
    */
   def dedupWinnowOverlap(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val parts = s.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(32)
+    val parts = parallelism(s)
     val wdf = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
     val xf = docs(s, dir)
       .repartition(parts, col("doc_id")) // spread the kernel (see dedupBowFp)
@@ -892,7 +885,6 @@ object Text {
    * word count.
    */
   def textRepetition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val nw = size(words(col("text"))).cast("long")
     val total = greatest(nw - 2, lit(1L)) // n-2 shingles; short docs → 1
     val distinctSh = size(graft.functions.GraftFunctions.shingle_set(col("text"), 3)).cast("long")
@@ -1344,7 +1336,6 @@ object Text {
   /** Shared per-doc subword accounting behind [[tokSubwordPieces]] and
     * [[tokFertility]] (unordered). */
   private def subwordPerDoc(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val w = docs(s, dir)
       .select(col("doc_id"), explode(words(col("text"))).as("word"))
     val wc = w.groupBy(col("word")).agg(count(lit(1)).as("c"))
@@ -1517,7 +1508,7 @@ object Text {
     val rulesPass = gopherPredicates.reduce(_ && _)
     val f0 = docs(s, dir)
       .select(col("doc_id"), col("source"),
-        rulesPass.as("p_rules"), bowFp(s, col("text")).as("fp"))
+        rulesPass.as("p_rules"), bowFp(col("text")).as("fp"))
     val keepers = f0.filter(col("p_rules"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), lit(1L).as("is_keeper"))

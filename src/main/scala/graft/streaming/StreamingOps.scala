@@ -234,7 +234,6 @@ object StreamingOps {
    * batch operators handle full-corpus dedup).
    */
   def dedupByFingerprint(docs: DataFrame, lateness: String = "1 hour"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       // same codegen kernel as the batch twin (the composed higher-order
       // spelling interprets a lambda per word — per micro-batch, forever)
@@ -517,7 +516,6 @@ object StreamingOps {
    */
   def kmeansAssignStream(newVecs: DataFrame, centDims: DataFrame): DataFrame = {
     import graft.queries.{KmeansFit, Similarity}
-    graft.functions.GraftFunctions.register(newVecs.sparkSession)
     def dot(a: Column, b: Column): Column =
       graft.functions.GraftFunctions.dot_f64(a, b)
     val cents = KmeansFit.centRelOf(

@@ -33,7 +33,7 @@ object CorpusKmeans {
     // the Lloyd loop's cached intermediates live until the model is written
     val scope = new graft.core.QueryCaches.CacheScope
     try scope {
-      graft.queries.KmeansFit.fit(s, e, rounds, target)
+      graft.queries.KmeansFit.fit(e, rounds, target)
         .write.mode("overwrite").parquet(s"$modelUri/cent")
     } finally scope.release()
     val c = s.read.parquet(s"$modelUri/cent")
@@ -49,7 +49,7 @@ object CorpusKmeans {
     * in the caller's active [[graft.core.QueryCaches]] scope (callers
     * materialize, then release it). */
   def assignWithKmeans(spark: SparkSession, e: DataFrame, modelUri: String): DataFrame =
-    graft.queries.KmeansFit.assignCentroids(spark, e,
+    graft.queries.KmeansFit.assignCentroids(e,
       spark.read.parquet(s"$modelUri/cent"))
 
   /** DAG worker: run the Lloyd loop over an embeddings table and persist

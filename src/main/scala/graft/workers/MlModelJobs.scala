@@ -55,7 +55,7 @@ object MlModelJobs {
     case MlModelPipelines.GoogleAnalytics =>
       MlCompiler.dataset(spark, ga4(spark, cfg), cfg.dataset, step)
     case MlModelPipelines.FirstParty =>
-      MlCompiler.firstPartyDataset(spark, fpv(spark, cfg), cfg.dataset, step)
+      MlCompiler.firstPartyDataset(fpv(spark, cfg), cfg.dataset, step)
     case MlModelPipelines.GoogleAnalyticsAndFirstParty =>
       // GA supplies label, trigger, and first_value; the fp relation
       // contributes ids + features (an fp first_value would collide with

@@ -95,7 +95,7 @@ object Workers {
             ctx.log("Dry run: statement parsed (command — not executed)")
           } else {
             try {
-              val bytes = spark.sql(rewritten).queryExecution.optimizedPlan.stats.sizeInBytes
+              val bytes = BqDialect.sql(spark, stmt).queryExecution.optimizedPlan.stats.sizeInBytes
               ctx.log(s"Dry run: estimated $bytes bytes processed")
             } catch {
               // ONLY a missing-relation error naming a created object is
@@ -126,7 +126,7 @@ object Workers {
       val query = str(params, "query")
       val dest = str(params, "bq_table_id")
       require(query.trim.nonEmpty && dest.nonEmpty, "'query' and 'bq_table_id' are required")
-      val df = spark.sql(BqDialect.rewrite(query))
+      val df = BqDialect.sql(spark, query)
       writeTable(df, dest, overwrite = bool(params, "overwrite", default = true))
     }
   }

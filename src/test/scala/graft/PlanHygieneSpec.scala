@@ -49,10 +49,15 @@ class PlanHygieneSpec extends AnyFunSuite with SparkFixture {
   private def collectPlan(p: LogicalPlan): Seq[LogicalPlan] =
     (p +: p.children.flatMap(collectPlan)) ++ p.subqueries.flatMap(collectPlan)
 
+  // Each query builds on its own fresh session, whose function registry
+  // holds only Spark's built-ins: a build must not lean on an earlier
+  // build's session state. No action ever runs over the plan, so the
+  // build's caches are dropped right after it.
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name: no unpartitioned window, no cartesian join (optimized plan)") {
-      val df = fn(spark, sfDir)
-      val plan = df.queryExecution.optimizedPlan
+      val s = spark.newSession()
+      val plan = try fn(s, sfDir).queryExecution.optimizedPlan
+        finally s.catalog.clearCache()
       val nodes = collectPlan(plan)
 
       val badWindows = nodes.collect {

@@ -12,7 +12,6 @@ class KernelExpressionsSpec extends AnyFunSuite with SparkFixture {
 
   test("winnow_fp equals the transform/slice/array_min spelling") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(7)
     val alpha = "ab cdefg"
     val rows = (1 to 300).map { i =>
@@ -52,7 +51,6 @@ class KernelExpressionsSpec extends AnyFunSuite with SparkFixture {
 
   test("affine_minhash equals the per-permutation transform+array_min spelling") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(23)
     val rows = (1 to 300).map { i =>
       (i.toLong, (0 until (1 + rng.nextInt(60))).map(_ => rng.nextInt().toLong & 0xffffffffL))
@@ -79,7 +77,6 @@ class KernelExpressionsSpec extends AnyFunSuite with SparkFixture {
 
   test("shingle_set equals the filter/split/transform/concat_ws spelling") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(13)
     val vocab = Array("the", "cat", "sat", "on", "a", "mat", "zz", "été")
     val rows = (1 to 300).map { i =>
@@ -124,7 +121,6 @@ class KernelExpressionsSpec extends AnyFunSuite with SparkFixture {
 
   test("dot_f64 equals the aggregate(zip_with) spelling bit-for-bit") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(41)
     val rows = (1 to 300).map { i =>
       def v() = (0 until 64).map(_ => rng.nextDouble() * 2 - 1)
@@ -141,7 +137,6 @@ class KernelExpressionsSpec extends AnyFunSuite with SparkFixture {
 
   test("greedy_pair_count equals a reference greedy scan on random strings") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(13)
     val alpha = "abcd"
     // merge table: a random half of the 16 possible pairs

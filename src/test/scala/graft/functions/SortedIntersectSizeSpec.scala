@@ -11,7 +11,6 @@ class SortedIntersectSizeSpec extends AnyFunSuite with SparkFixture {
 
   test("merge count equals size(array_intersect) on random sorted distinct arrays") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(11)
     val rows = (1 to 500).map { i =>
       def arr() = (0 until rng.nextInt(30))

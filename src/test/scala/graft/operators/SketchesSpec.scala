@@ -13,7 +13,6 @@ class SketchesSpec extends AnyFunSuite with SparkFixture {
   private val dir = "/root/testdata/sf0.01"
 
   private def shingles(df: org.apache.spark.sql.DataFrame) = {
-    graft.functions.GraftFunctions.register(spark)
     df.select(col("doc_id"),
       explode(graft.functions.GraftFunctions.shingle_set(col("text"), 5)).as("sh"))
   }

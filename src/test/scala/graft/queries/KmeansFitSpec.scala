@@ -28,7 +28,6 @@ class KmeansFitSpec extends AnyFunSuite with SparkFixture {
     val centRel = {
       val s = spark
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       cents.toSeq.map { case (cid, cv) => (cid, cv) }.toDF("cid", "cv")
         .withColumn("cc", graft.functions.GraftFunctions.dot_f64(col("cv"), col("cv")))
     }

@@ -392,7 +392,6 @@ class QualityOpsSpec extends AnyFunSuite with SparkFixture {
     // independent spelling of the same two-level rule: coarse-assign
     // members AND centroids to the first ⌈√C⌉ centroids with an
     // argmin window, then the fine argmin runs within the coarse cell
-    graft.functions.GraftFunctions.register(spark)
     def darr(cn: org.apache.spark.sql.Column) = transform(cn, x => x.cast("double"))
     def dotf(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.functions.GraftFunctions.dot_f64(a, b)

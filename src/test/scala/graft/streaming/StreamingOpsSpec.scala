@@ -361,6 +361,28 @@ class StreamingOpsSpec extends AnyFunSuite with SparkFixture {
     assert(s.sharedState.cacheManager.isEmpty, "the benchmark row outlived stop() and release()")
   }
 
+  test("decontaminationStream: builds on a fresh session that registered no graft functions") {
+    val s = spark.newSession()
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val bench = Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
+    val in = MemoryStream[(Long, String)]
+    val scope = new graft.core.QueryCaches.CacheScope
+    val q = scope(StreamingOps.decontaminationStream(in.toDF().toDF("doc_id", "text"), bench)
+      .writeStream.format("memory").queryName("decontam_fresh").outputMode("append").start())
+    try {
+      in.addData((2L, "the quick brown fox jumps over the lazy dog again"),
+        (3L, "nothing in this sentence repeats the benchmark text"))
+      q.processAllAvailable()
+      val got = s.table("decontam_fresh").select("doc_id", "contaminated")
+        .as[(Long, Boolean)].collect().toMap
+      assert(got == Map(2L -> true, 3L -> false))
+    } finally {
+      q.stop()
+      scope.release()
+    }
+  }
+
   test("semanticDecontamStream: online verdicts equal the batch embedding-cosine gate") {
     val s = spark
     import s.implicits._
@@ -485,9 +507,9 @@ class StreamingOpsSpec extends AnyFunSuite with SparkFixture {
         ("sf0.001 C=8",
           s.read.parquet("/root/testdata/sf0.001/embeddings.parquet"), 256L))
       .foreach { case (label, emb, target) =>
-        val cent = graft.queries.KmeansFit.fit(s, emb, 2, target)
+        val cent = graft.queries.KmeansFit.fit(emb, 2, target)
           .persist()
-        val batch = graft.queries.KmeansFit.assignCentroids(s, emb, cent)
+        val batch = graft.queries.KmeansFit.assignCentroids(emb, cent)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         val vecs = emb.filter(col("vec_id") >= 8 && col("embedding").isNotNull)
           .select("vec_id", "embedding")

@@ -65,7 +65,7 @@ class CorpusKmeansSpec extends AnyFunSuite with SparkFixture {
 
   test("fit is deterministic: two runs produce identical model tables") {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    def run() = graft.queries.KmeansFit.fit(spark, e, 2)
+    def run() = graft.queries.KmeansFit.fit(e, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSeq.sorted
     assert(run() == run())
@@ -88,7 +88,7 @@ class CorpusKmeansSpec extends AnyFunSuite with SparkFixture {
     val e = (seeds ++ members).toDF("vec_id", "embedding")
       .withColumn("label", lit(0))
     val target = 2L // 24 members / 2 -> C = 12 > 8: the two-level loop
-    val got = graft.queries.KmeansFit.fit(spark, e, 3, target)
+    val got = graft.queries.KmeansFit.fit(e, 3, target)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSeq.sorted
     // driver-side reference: flat argmin every round, exact 6-dp half-up
@@ -137,7 +137,7 @@ class CorpusKmeansSpec extends AnyFunSuite with SparkFixture {
     val s = spark
     import s.implicits._
     val e = Seq.empty[(Long, Array[Float], Int)].toDF("vec_id", "embedding", "label")
-    val out = graft.queries.KmeansFit.fit(spark, e, 3)
+    val out = graft.queries.KmeansFit.fit(e, 3)
     assert(out.columns.toSeq == Seq("cid", "dim", "n", "c_new"))
     assert(out.count() == 0L)
     spark.catalog.clearCache()

@@ -3,7 +3,6 @@ package graft.workers
 import graft.SparkFixture
 import graft.core.Spec.WorkerValue
 import graft.core.Dag.WorkerContext
-import graft.functions.GraftFunctions
 import graft.plans.MlCompiler
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -102,15 +101,6 @@ class MlSpec extends AnyFunSuite with SparkFixture {
     assert(after3.last > after3.head)
   }
 
-  test("MlCompiler: first-party variable discovery drops struct columns (bigquery.py:150-162)") {
-    import spark.implicits._
-    val df = Seq((1L, "a", 2.5)).toDF("id", "name", "score")
-      .withColumn("geo", struct(lit("US").as("country")))
-    val vars = MlCompiler.firstPartyVariables(df)
-    assert(vars.map(_._1) == Seq("id", "name", "score"))
-    assert(vars.toMap.apply("score") == "double")
-  }
-
   test("ML dataset scans prune event-date partitions (suffix window reaches the scan)") {
     val df = graft.queries.Ml.mlTrainingDataset(spark, "/root/testdata/sf0.001")
     df.collect()
@@ -132,7 +122,6 @@ class MlSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("MlCompiler: hash split partitions users 90/10 disjointly; rebalance keeps all positives") {
-    GraftFunctions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val ga4 = graft.queries.Ga4.ga4Events(spark, dir)
     def cfg(split: Boolean, imb: Int) = MlCompiler.MlModel(
@@ -168,7 +157,6 @@ class MlSpec extends AnyFunSuite with SparkFixture {
     // each counter with an independent explode+conditional-agg spelling
     // (exists-probe and explode agree because param keys are unique per
     // event).
-    GraftFunctions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val ga4 = graft.queries.Ga4.ga4Events(spark, dir)
     import MlCompiler._
@@ -285,7 +273,6 @@ class MlSpec extends AnyFunSuite with SparkFixture {
     // numeric-looking strings only; real GA4 exports do neither. Both
     // shapes must yield NULL/uncounted rows, not an ANSI
     // INVALID_ARRAY_INDEX_IN_ELEMENT_AT / CAST_INVALID_INPUT job kill.
-    GraftFunctions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val ga4 = graft.queries.Ga4.ga4Events(spark, dir)
       .withColumn("event_params", // strip the engagement param from odd events

@@ -162,6 +162,22 @@ class WorkersSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(s"$dir/out").count() == 2) // truncate again
   }
 
+  test("QueryLauncher: FARM_FINGERPRINT resolves on a fresh session") {
+    val s = spark.newSession()
+    val dir = Files.createTempDirectory("graft_ql_fp")
+    new Workers.QueryLauncher(s, Map(
+      "query" -> WorkerValue.S("SELECT FARM_FINGERPRINT('abc') AS fp"),
+      "bq_table_id" -> WorkerValue.S(s"$dir/out"))).execute(noCtx)
+    assert(s.read.parquet(s"$dir/out").head().getLong(0) ==
+      graft.functions.FarmHash.fingerprint64("abc"))
+  }
+
+  test("SqlScriptExecutor: dry_run analyzes FARM_FINGERPRINT on a fresh session") {
+    new Workers.SqlScriptExecutor(spark.newSession(), Map(
+      "script" -> WorkerValue.S("SELECT FARM_FINGERPRINT('abc') AS fp"),
+      "dry_run" -> WorkerValue.B(true))).execute(noCtx)
+  }
+
   test("StorageExporter: gzip CSV with header") {
     val dir = Files.createTempDirectory("graft_exp")
     import spark.implicits._
